@@ -1,7 +1,10 @@
 package graft.materialize
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Incremental, fingerprint-gated materialization — the Spark-native
   * re-expression of the reference's materialization machinery: a derived
@@ -12,50 +15,45 @@ import org.apache.spark.sql.functions._
   *
   * Mechanics:
   *  - fingerprint(bucket) = (row count, bit_xor of xxhash64 over all
-  *    columns) — order-independent and overflow-free, computed with one
-  *    aggregation over the source (map-side partial, one shuffle on the
-  *    bucket key). The row count guards the xor's blind spot (a pair of
-  *    identical rows xors to zero).
-  *  - state = parquet at `stateDir` holding (bucket, fingerprint); read and
-  *    compared via a full outer join, so only changed/new/vanished buckets
-  *    are touched.
+  *    columns, DECIMAL sum of the same hashes) — order-independent and
+  *    overflow-free, computed with one aggregation over the source
+  *    (map-side partial, one shuffle on the bucket key) and collected to
+  *    the driver.
+  *  - state = parquet at `stateDir` holding (bucket, fingerprint), read
+  *    with an explicit schema and compared with the fingerprints on the
+  *    driver: a source bucket is stale when the state has no entry for it
+  *    or a different one. Buckets that vanished from the source are not
+  *    recomputed; their state entries and derived rows stay until the
+  *    retention cut passes them.
   *  - recompute = transform(source rows of stale buckets) written with
   *    dynamic partition overwrite into `targetDir/bucket=...` — untouched
   *    buckets keep their files; the write is idempotent per bucket.
+  *  - commit = the previous state with the stale buckets' fresh
+  *    fingerprints merged in and the buckets below the retention cut
+  *    dropped, written once to `stateDir.tmp`, which then replaces
+  *    `stateDir` (delete, then rename). A crash between the two leaves no
+  *    state, which reads as empty: a conservative full recompute. A pass
+  *    that changes nothing writes nothing.
   *
-  * The stale-bucket list is collected to the driver: its cardinality is the
-  * number of *changed time buckets*, bounded by the retention window (e.g.
-  * hours in a year ≈ 8.8k), not by data volume — safe at 100 TB.
+  * The fingerprints, the state and the stale-bucket list live on the
+  * driver: their cardinality is the number of *time buckets*, bounded by
+  * the retention window (e.g. hours in a year ≈ 8.8k), not by data
+  * volume — safe at 100 TB.
   */
 final class Materializer(spark: SparkSession, stateDir: String) {
 
   import Materializer._
 
-  private def readState(): DataFrame = {
-    // graft.Fs answers existence on the state dir's OWN filesystem and
-    // ignores write markers: a crash that left only _temporary/_SUCCESS
-    // behind degrades to the empty-state branch (conservative full
-    // recompute) instead of a permanent parquet read failure
-    if (graft.Fs.existsNonEmptyData(spark, stateDir)) {
-      val df = spark.read.parquet(stateDir)
-      // State written by an older version (before fp_sum joined the
-      // fingerprint) parses fine as parquet but lacks the column; surface
-      // it as NULL instead of letting the downstream select throw — the
-      // null-safe compare then marks every such bucket stale, so old state
-      // degrades to a one-time full recompute rather than a permanent crash.
-      if (df.columns.contains("fp_sum")) df
-      else df.withColumn("fp_sum",
-        lit(null).cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-    } else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("fp_count", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("fp_hash", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("fp_sum",
-            org.apache.spark.sql.types.DecimalType(38, 0)))))
-  }
+  /** bucket -> fingerprint. graft.Fs answers existence on the state dir's
+    * OWN filesystem and ignores write markers: a crash that left only
+    * _temporary/_SUCCESS behind degrades to the empty state (conservative
+    * full recompute) instead of a permanent parquet read failure. State
+    * written before fp_sum joined the fingerprint reads it as NULL, so
+    * every such bucket compares stale once. */
+  private def readState(): Map[String, Fingerprint] =
+    if (graft.Fs.existsNonEmptyData(spark, stateDir))
+      toFingerprints(spark.read.schema(StateSchema).parquet(stateDir).collect())
+    else Map.empty
 
   /** Fingerprint every bucket of `source` (bucket column must be named
     * `bucket` and be string-typed; callers derive it, e.g.
@@ -69,7 +67,19 @@ final class Materializer(spark: SparkSession, stateDir: String) {
     source.groupBy("bucket").agg(
       count(lit(1)).as("fp_count"),
       bit_xor(h).as("fp_hash"),
-      sum(h.cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("fp_sum"))
+      sum(h.cast(DecimalType(38, 0))).as("fp_sum"))
+  }
+
+  /** Write `state` to `stateDir.tmp`, then swap it in for `stateDir`. */
+  private def commit(state: Map[String, Fingerprint]): Unit = {
+    val rows = state.toSeq.sortBy(_._1).map { case (b, f) => Row(b, f.count, f.hash, f.sum) }
+    val tmp = stateDir + ".tmp"
+    spark.createDataFrame(rows.asJava, StateSchema).coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(tmp)
+    val (fs, dst) = graft.Fs.fileSystem(spark, stateDir)
+    fs.delete(dst, true)
+    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
+      throw new java.io.IOException(s"could not rename $tmp to $stateDir")
   }
 
   /** Run one materialization pass; returns the buckets recomputed.
@@ -81,72 +91,40 @@ final class Materializer(spark: SparkSession, stateDir: String) {
     * @param stableBefore optional gate: only buckets strictly below this
     *                  value are (re)materialized — the stability delay
     *                  that keeps still-filling buckets out
+    * @param retainFrom optional retention cut: buckets strictly below it
+    *                  are neither materialized nor kept in the state
     */
   def materialize(
       source: DataFrame,
       transform: DataFrame => DataFrame,
       targetDir: String,
-      stableBefore: Option[String] = None): MaterializeResult = {
+      stableBefore: Option[String] = None,
+      retainFrom: Option[String] = None): MaterializeResult = {
 
-    val fps = stableBefore match {
-      case Some(hi) => fingerprints(source).where(col("bucket") < hi)
-      case None     => fingerprints(source)
-    }
-    val st = readState()
-      .select(col("bucket").as("s_bucket"), col("fp_count").as("s_count"),
-        col("fp_hash").as("s_hash"), col("fp_sum").as("s_sum"))
-
-    val joined = fps.join(st, col("bucket") === col("s_bucket"), "left")
-    val stale = joined.where(
-        col("s_bucket").isNull ||
-        col("fp_count") =!= col("s_count") ||
-        !(col("fp_hash") <=> col("s_hash")) ||
-        !(col("fp_sum") <=> col("s_sum")))
-      .select("bucket").collect().map(_.getString(0)).sorted
+    val gates = stableBefore.map(col("bucket") < _) ++ retainFrom.map(col("bucket") >= _)
+    val fps = toFingerprints(gates.foldLeft(fingerprints(source))(_ where _).collect())
+    val state = readState()
+    val stale = fps.collect { case (b, f) if !state.get(b).contains(f) => b }.toSeq.sorted
 
     if (stale.nonEmpty) {
-      val staleRows = source.where(col("bucket").isin(stale.toSeq: _*))
-      val out = transform(staleRows)
+      val out = transform(source.where(col("bucket").isin(stale: _*)))
       require(out.columns.contains("bucket"),
         "materialization transform must preserve the 'bucket' column")
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try out.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(targetDir)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      // persist the new state: recomputed buckets' fresh fingerprints merged
-      // over the previous state (unchanged buckets keep their entries).
-      val kept = st.where(!col("s_bucket").isin(stale.toSeq: _*))
-        .select(col("s_bucket").as("bucket"), col("s_count").as("fp_count"),
-          col("s_hash").as("fp_hash"), col("s_sum").as("fp_sum"))
-      val fresh = fps.where(col("bucket").isin(stale.toSeq: _*))
-      val newState = kept.unionByName(fresh)
-      // two-phase write so a crash never leaves a half-written state dir
-      val tmp = stateDir + ".tmp"
-      newState.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-      spark.read.parquet(tmp).coalesce(1).write.mode(SaveMode.Overwrite).parquet(stateDir)
+      out.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket").parquet(targetDir)
     }
-    MaterializeResult(stale.toSeq)
+    val next = retainFrom.foldLeft(state ++ fps)((s, cut) => s.filter(_._1 >= cut))
+    if (next != state) commit(next)
+    MaterializeResult(stale)
   }
 
-  /** Retention companion: drop state rows for buckets strictly below
-    * `cutoff`, so buckets whose raw partitions were expired don't linger
-    * in the fingerprint state forever (they would never be flagged —
-    * the stale join is source-driven — but the state file would grow
-    * without bound, and retention exists precisely to bound it). Same
-    * two-phase state rewrite as [[materialize]]. Returns rows dropped. */
-  def purgeStateBefore(cutoff: String): Long = {
-    val st = readState()
-    val keep = st.where(col("bucket") >= cutoff)
-    val nDropped = st.count() - keep.count()
-    if (nDropped > 0) {
-      val tmp = stateDir + ".tmp"
-      keep.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-      spark.read.parquet(tmp).coalesce(1).write.mode(SaveMode.Overwrite).parquet(stateDir)
-    }
-    nDropped
+  /** Retention for a source that has no rows left: drops the state
+    * entries of buckets strictly below `retainFrom`, as [[materialize]]
+    * does with its `retainFrom`, with the same single commit. */
+  def expire(retainFrom: String): Unit = {
+    val state = readState()
+    val next = state.filter(_._1 >= retainFrom)
+    if (next != state) commit(next)
   }
 }
 
@@ -154,4 +132,17 @@ object Materializer {
   final case class MaterializeResult(recomputedBuckets: Seq[String]) {
     def nRecomputed: Int = recomputedBuckets.size
   }
+
+  /** One bucket's fingerprint; `sum` is null in state written before it
+    * existed, which never equals a computed fingerprint. */
+  private final case class Fingerprint(count: Long, hash: Long, sum: java.math.BigDecimal)
+
+  private val StateSchema = StructType(Seq(
+    StructField("bucket", StringType),
+    StructField("fp_count", LongType),
+    StructField("fp_hash", LongType),
+    StructField("fp_sum", DecimalType(38, 0))))
+
+  private def toFingerprints(rows: Array[Row]): Map[String, Fingerprint] =
+    rows.map(r => r.getString(0) -> Fingerprint(r.getLong(1), r.getLong(2), r.getDecimal(3))).toMap
 }

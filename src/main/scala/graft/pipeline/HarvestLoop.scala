@@ -20,8 +20,9 @@ import graft.store.Triggers
   *     paths) is the exactly-once guard — a re-listed file is never
   *     re-read, so re-running a tick after a crash cannot double-ingest.
   *  2. **Materialize**: the fingerprint-gated [[Materializer]] recomputes
-  *     ONLY buckets whose raw rows changed (new/late/vanished data),
-  *     writing per-bucket dynamic overwrites into the derived store.
+  *     ONLY buckets whose raw rows changed (new, late or removed rows of a
+  *     bucket that still has raw rows), writing per-bucket dynamic
+  *     overwrites into the derived store.
   *  3. **Notify**: trigger rules evaluate over the freshly recomputed
   *     buckets only — never the whole derived store — and exceedances
   *     append to the notification store. A bucket recomputed after late
@@ -29,10 +30,11 @@ import graft.store.Triggers
   *     values supersede the old ones, and downstream consumers read
   *     notifications as an append-only event log).
   *
-  * Scale stance: the per-tick driver state is file PATHS and BUCKET ids —
-  * both bounded by operational cardinality (files per cycle, buckets per
-  * retention window), never by data volume. Row data only ever moves
-  * through partitioned writes and fingerprint aggregations.
+  * Scale stance: the per-tick driver state is file PATHS, BUCKET ids and
+  * one fingerprint per bucket — all bounded by operational cardinality
+  * (files per cycle, buckets per retention window), never by data volume.
+  * Row data only ever moves through partitioned writes and fingerprint
+  * aggregations.
   *
   * Contracts: `reader` must emit a string `bucket` column; `transform`
   * must preserve it (Materializer requirement); when `rules` is non-empty
@@ -59,17 +61,18 @@ final class HarvestLoop(
     * (operational cardinality, like the Materializer's stale list). */
   private def ingestedFiles(): Set[String] =
     if (Fs.existsNonEmptyData(spark, ingestLogDir))
-      spark.read.parquet(ingestLogDir).collect().map(_.getString(0)).toSet
+      spark.read.schema("file STRING").parquet(ingestLogDir).collect().map(_.getString(0)).toSet
     else Set.empty
 
   /** One orchestration cycle; see class doc. `stableBefore` is the
     * materialization stability delay (buckets at or past it stay hot);
     * `expireBefore` is the retention cutoff — bucket partitions strictly
     * below it are dropped from the raw and derived stores (metadata-only
-    * partition deletes, [[graft.Fs.dropPartitions]]) and purged from the
-    * materializer state, BEFORE materialization so a tick never recomputes
-    * a bucket it is about to expire. Notifications are deliberately NOT
-    * expired here: they are the append-only event log. */
+    * partition deletes, [[graft.Fs.dropPartitions]]) BEFORE
+    * materialization, so a tick never recomputes a bucket it is about to
+    * expire, and the materializer drops them from its state in the same
+    * commit as the tick's fresh fingerprints. Notifications are
+    * deliberately NOT expired here: they are the append-only event log. */
   def tick(
       stableBefore: Option[String] = None,
       expireBefore: Option[String] = None): TickReport = {
@@ -88,35 +91,39 @@ final class HarvestLoop(
       fresh.toDF("file").coalesce(1).write.mode(SaveMode.Append).parquet(ingestLogDir)
     }
 
-    val expired = expireBefore match {
-      case Some(cut) =>
-        val raw = Fs.dropPartitions(spark, rawDir, "bucket", cut)
-        val der = Fs.dropPartitions(spark, derivedDir, "bucket", cut)
-        new Materializer(spark, stateDir).purgeStateBefore(cut)
-        (raw ++ der).distinct.sorted
-      case None => Nil
+    val expired = expireBefore.toSeq.flatMap { cut =>
+      (Fs.dropPartitions(spark, rawDir, "bucket", cut) ++
+        Fs.dropPartitions(spark, derivedDir, "bucket", cut)).distinct.sorted
     }
 
-    if (!Fs.existsNonEmptyData(spark, rawDir))
+    val materializer = new Materializer(spark, stateDir)
+    if (!Fs.existsNonEmptyData(spark, rawDir)) {
+      expireBefore.foreach(materializer.expire)
       return TickReport(fresh, Nil, 0L, expired)
-
-    val raw = spark.read.parquet(rawDir)
-    val result = new Materializer(spark, stateDir)
-      .materialize(raw, transform, derivedDir, stableBefore)
-
-    var raised = 0L
-    if (result.recomputedBuckets.nonEmpty && rules.nonEmpty) {
-      val freshRows = spark.read.parquet(derivedDir)
-        .where(col("bucket").isin(result.recomputedBuckets: _*))
-      val notes = Triggers.evaluate(freshRows, rules)
-      raised = notes.count()
-      if (raised > 0) Triggers.store(notes, notificationsDir)
     }
+
+    val result = materializer.materialize(spark.read.parquet(rawDir), transform, derivedDir,
+      stableBefore, expireBefore)
+    val raised = notifyRecomputed(spark, derivedDir, result.recomputedBuckets, rules, notificationsDir)
     TickReport(fresh, result.recomputedBuckets, raised, expired)
   }
 }
 
 object HarvestLoop {
+  /** The notify step of both harvest paths: evaluates `rules` over the
+    * derived rows of the `recomputed` buckets and appends the exceedances
+    * to the notification store in one pass; returns the rows appended. */
+  private[pipeline] def notifyRecomputed(
+      spark: SparkSession,
+      derivedDir: String,
+      recomputed: Seq[String],
+      rules: Seq[Triggers.Rule],
+      notificationsDir: String): Long =
+    if (recomputed.isEmpty || rules.isEmpty) 0L
+    else Triggers.raise(
+      spark.read.parquet(derivedDir).where(col("bucket").isin(recomputed: _*)),
+      rules, notificationsDir)
+
   /** What one cycle did — the daemon's heartbeat record. */
   final case class TickReport(
       filesIngested: Seq[String],

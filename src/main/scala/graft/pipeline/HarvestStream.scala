@@ -100,15 +100,8 @@ final class HarvestStream(
       .drop("ingest_batch")
     val result = new Materializer(spark, stateDir)
       .materialize(raw, transform, derivedDir, None)
-
-    var raised = 0L
-    if (result.recomputedBuckets.nonEmpty && rules.nonEmpty) {
-      val freshRows = spark.read.parquet(derivedDir)
-        .where(col("bucket").isin(result.recomputedBuckets: _*))
-      val notes = Triggers.evaluate(freshRows, rules)
-      raised = notes.count()
-      if (raised > 0) Triggers.store(notes, notificationsDir)
-    }
+    val raised = HarvestLoop.notifyRecomputed(spark, derivedDir, result.recomputedBuckets,
+      rules, notificationsDir)
     TickReport(Nil, result.recomputedBuckets, raised)
   }
 }

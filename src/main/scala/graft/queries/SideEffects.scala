@@ -1001,13 +1001,8 @@ object SideEffects {
       // the readback diverge quietly (r12, ADVICE).
       require(!corrected.isEmpty,
         s"empty corrected set for $target: dynamic overwrite would keep the stale partition")
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try corrected.write.partitionBy("day").mode("overwrite").parquet(out)
-      finally prev match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      corrected.write.partitionBy("day").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(out)
       s.read.parquet(out)
         .groupBy("day")
         .agg(count(lit(1)).as("n_events"), sum("micro").as("sum_micro"))

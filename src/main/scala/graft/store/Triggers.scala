@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Trigger rules and the notification store: threshold rules evaluated
@@ -69,6 +69,16 @@ object Triggers {
     notifications
       .withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
       .write.mode(SaveMode.Append).partitionBy("d").parquet(dir)
+
+  /** Evaluate `rules` over `kpis` and append the exceedances to the store
+    * at `dir`, evaluating the rules once; returns the rows appended. The
+    * count is observed on the write itself, and a write of no rows adds no
+    * data file. */
+  def raise(kpis: DataFrame, rules: Seq[Rule], dir: String): Long = {
+    val written = Observation()
+    store(evaluate(kpis, rules).observe(written, count(lit(1)).as("n")), dir)
+    written.get("n").asInstanceOf[Long]
+  }
 
   /** Cooldown suppression — the daemon's alarm-flood guard: a
     * (entity, rule) pair raises at most once per `cooldown`. A fresh

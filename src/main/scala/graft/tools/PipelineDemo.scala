@@ -41,10 +41,9 @@ object PipelineDemo {
     println(s"[pipeline] trend raw=${raw.count()} rows, hourly=${store.read("1h").count()} rows")
 
     // 3. triggers over the hourly KPIs -> notification store
-    val notes = Triggers.evaluate(store.read("1h"),
-      Seq(Triggers.Rule("load_high", "kpi_load", "major")(_ > 150.0)))
-    Triggers.store(notes, s"$work/notifications")
-    println(s"[pipeline] ${notes.count()} notifications raised")
+    val raised = Triggers.raise(store.read("1h"),
+      Seq(Triggers.Rule("load_high", "kpi_load", "major")(_ > 150.0)), s"$work/notifications")
+    println(s"[pipeline] $raised notifications raised")
 
     // 3b. maintenance: compact the (many-small-files) notification store
     val (fBefore, fAfter) = graft.store.Compaction.compactTo(

@@ -24,13 +24,14 @@ class HarvestLoopSpec extends SparkSpec {
     try lines.foreach(pw.println) finally pw.close()
   }
 
+  private val transform: DataFrame => DataFrame = src =>
+    src.groupBy("bucket", "entity_id")
+      .agg(sum("value").as("kpi_load"), max("ts").as("ts"))
+
   private def mkLoop(landing: String, work: String): HarvestLoop = {
     val reader: Seq[String] => DataFrame = paths =>
       spark.read.schema(schema).csv(paths: _*)
         .withColumn("bucket", date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH"))
-    val transform: DataFrame => DataFrame = src =>
-      src.groupBy("bucket", "entity_id")
-        .agg(sum("value").as("kpi_load"), max("ts").as("ts"))
     new HarvestLoop(spark, landing, work, reader, transform,
       Seq(Triggers.Rule("load_high", "kpi_load", "major")(_ > 150.0)))
   }
@@ -129,6 +130,96 @@ class HarvestLoopSpec extends SparkSpec {
 
     // the next plain tick is a clean no-op — expiry left no stale signal
     assert(loop.tick().isNoOp)
+  }
+
+  /** Every file under `dir` (markers included) with its mtime. */
+  private def snapshot(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    val st = java.nio.file.Files.walk(root)
+    try st.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString ->
+        java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
+    finally st.close()
+  }
+
+  private def derivedEqualsTransform(loop: HarvestLoop, work: String): Boolean = {
+    val cols = Seq("bucket", "entity_id", "kpi_load", "ts").map(col)
+    val derived = spark.read.parquet(loop.derivedDir).select(cols: _*)
+    val expected = transform(spark.read.parquet(s"$work/raw")).select(cols: _*)
+    derived.exceptAll(expected).isEmpty && expected.exceptAll(derived).isEmpty
+  }
+
+  test("crash between state delete and rename: full recompute of the retained buckets") {
+    import org.apache.commons.io.FileUtils
+    val landing = tmpDir("hl_landing5")
+    val work = tmpDir("hl_work5")
+    writeCsv(landing, "f1.csv", Seq(
+      "1,2024-01-01 10:05:00,200.0",
+      "2,2024-01-01 11:05:00,20.0",
+      "3,2024-01-01 12:05:00,30.0"))
+    val loop = mkLoop(landing, work)
+    assert(loop.tick().bucketsRecomputed.size == 3)
+
+    // the commit died after deleting `state`, leaving a finished state.tmp
+    val state = new File(work, "state")
+    val tmp = new File(work, "state.tmp")
+    FileUtils.copyDirectory(state, tmp)
+    FileUtils.deleteDirectory(state)
+
+    val r = loop.tick(expireBefore = Some("2024-01-01 11"))
+    assert(r.bucketsExpired == Seq("2024-01-01 10"), r.toString)
+    assert(r.bucketsRecomputed == Seq("2024-01-01 11", "2024-01-01 12"), r.toString)
+    assert(derivedEqualsTransform(loop, work))
+    assert(spark.read.parquet(state.toString).count() == 2)
+    assert(!tmp.exists(), "the commit must consume state.tmp")
+    assert(loop.tick(expireBefore = Some("2024-01-01 11")).isNoOp)
+  }
+
+  test("a retention cut that expires every raw bucket still empties the state") {
+    val landing = tmpDir("hl_landing6")
+    val work = tmpDir("hl_work6")
+    writeCsv(landing, "f1.csv", Seq(
+      "1,2024-01-01 10:05:00,10.0",
+      "2,2024-01-01 11:05:00,20.0"))
+    val loop = mkLoop(landing, work)
+    loop.tick()
+    assert(spark.read.parquet(s"$work/state").count() == 2)
+
+    val r = loop.tick(expireBefore = Some("2024-01-02 00"))
+    assert(r.bucketsExpired == Seq("2024-01-01 10", "2024-01-01 11"), r.toString)
+    assert(spark.read.parquet(s"$work/state").count() == 0)
+    assert(loop.tick(expireBefore = Some("2024-01-02 00")).isNoOp)
+  }
+
+  test("a no-op tick leaves every store directory untouched") {
+    val landing = tmpDir("hl_landing7")
+    val work = tmpDir("hl_work7")
+    writeCsv(landing, "f1.csv", Seq(
+      "1,2024-01-01 10:05:00,200.0",
+      "2,2024-01-01 11:05:00,20.0"))
+    val loop = mkLoop(landing, work)
+    loop.tick(expireBefore = Some("2024-01-01 10"))
+    val before = snapshot(work)
+    Thread.sleep(20) // a rewrite would move mtimes
+    assert(loop.tick(expireBefore = Some("2024-01-01 10")).isNoOp)
+    assert(snapshot(work) == before)
+  }
+
+  test("a tick that raises no notification adds no file to the notification store") {
+    val landing = tmpDir("hl_landing8")
+    val work = tmpDir("hl_work8")
+    writeCsv(landing, "f1.csv", Seq("1,2024-01-01 10:05:00,200.0"))
+    val loop = mkLoop(landing, work)
+    assert(loop.tick().notificationsRaised == 1L)
+    val files = Fs.countDataFiles(spark, loop.notificationsDir, ".parquet")
+    assert(files > 0)
+
+    writeCsv(landing, "f2.csv", Seq("2,2024-01-01 11:05:00,20.0"))
+    val r = loop.tick()
+    assert(r.bucketsRecomputed == Seq("2024-01-01 11") && r.notificationsRaised == 0L, r.toString)
+    assert(Fs.countDataFiles(spark, loop.notificationsDir, ".parquet") == files)
+    assert(spark.read.parquet(loop.notificationsDir).count() == 1)
   }
 
   test("stability delay keeps hot buckets out of a tick, picked up later") {

@@ -88,6 +88,26 @@ class MaterializerSpec extends SparkSpec {
     assert(r2.nRecomputed == 0, s"state not re-upgraded: ${r2.recomputedBuckets}")
   }
 
+  test("retention cut drops older buckets from the state in the pass's one commit") {
+    val src = bucketed(Tables.events(spark, sf0001))
+    val state = tmpDir("mat_state4")
+    val target = tmpDir("mat_target4")
+    val m = new Materializer(spark, state)
+    val buckets = src.select("bucket").distinct().orderBy("bucket")
+      .collect().map(_.getString(0)).toSeq
+    assert(m.materialize(src, transform, target).recomputedBuckets == buckets)
+
+    val cut = buckets(1)
+    val r = m.materialize(src, transform, target, retainFrom = Some(cut))
+    assert(r.nRecomputed == 0, s"the cut alone recomputed ${r.recomputedBuckets}")
+    assert(spark.read.parquet(state).select("bucket").collect().map(_.getString(0))
+      .sorted.toSeq == buckets.tail)
+    assert(!new java.io.File(state + ".tmp").exists(), "the commit must consume state.tmp")
+    // a bucket below the cut is never rematerialized, so the state stays cut
+    assert(m.materialize(src, transform, target, retainFrom = Some(cut)).nRecomputed == 0)
+    assert(spark.read.parquet(state).count() == buckets.size - 1)
+  }
+
   test("stability delay keeps hot buckets unmaterialized") {
     val src = bucketed(Tables.events(spark, sf0001))
     val state = tmpDir("mat_state3")

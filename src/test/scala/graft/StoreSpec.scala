@@ -441,14 +441,9 @@ class StoreSpec extends SparkSpec {
     val beforeA = files("da"); val beforeC = files("dc")
     assert(beforeA.nonEmpty && beforeC.nonEmpty)
     Thread.sleep(5) // ensure a rewrite would move mtimes
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try Seq((5L, "db", 99L)).toDF("id", "day", "v")
-      .write.partitionBy("day").mode("overwrite").parquet(out)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    Seq((5L, "db", 99L)).toDF("id", "day", "v")
+      .write.partitionBy("day").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(out)
     // untouched partitions: exact same files, same mtimes (no rewrite)
     assert(files("da") == beforeA, "partition da was touched")
     assert(files("dc") == beforeC, "partition dc was touched")
