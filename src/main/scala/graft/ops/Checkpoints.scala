@@ -37,7 +37,7 @@ object Checkpoints {
     * localCheckpoint truncates lineage — turn any premature free into a
     * hard read failure later, not a recompute. Call [[freeAll]] when
     * releasing every checkpoint under a composite plan is what you mean. */
-  def free(df: DataFrame): Unit = {
+  def free(df: DataFrame): Unit = if (!auditing) {
     val leaves = checkpointLeaves(df)
     require(leaves.length == 1,
       s"Checkpoints.free expects exactly one LogicalRDD leaf, found ${leaves.length}; " +
@@ -49,7 +49,7 @@ object Checkpoints {
     * for composite plans (joins/unions of checkpoints). Safe only once
     * nothing will read any of them again. */
   def freeAll(df: DataFrame): Unit =
-    checkpointLeaves(df).foreach(_.unpersist(blocking = false))
+    if (!auditing) checkpointLeaves(df).foreach(_.unpersist(blocking = false))
 
   /** Materialize `result` as its own checkpoint, then free every
     * checkpoint under each `spent` plan — the standard finish for an
@@ -58,10 +58,32 @@ object Checkpoints {
     * reclaimed by the ContextCleaner once the caller drops it; the
     * intermediates are gone immediately. */
   def finishFreeing(result: DataFrame, spent: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(true)
+    val out = stage(result)
     spent.foreach(freeAll)
     out
   }
+
+  /** Materialize `df` as a `localCheckpoint` (eager: the job runs here)
+    * and return the lineage-free frame over its blocks. Inside
+    * [[auditLazily]] it returns `df` unexecuted instead. */
+  def stage(df: DataFrame): DataFrame =
+    if (auditing) df else df.localCheckpoint(true)
+
+  /** Runs `body` with staging turned into plan composition: [[stage]]
+    * returns its input lazily, [[free]]/[[freeAll]] do nothing, and
+    * [[Iterate.untilFixpoint]] fails (its round count depends on the
+    * data). An operator that stages only through this object therefore
+    * returns, from its own registry route, the whole lazy plan it would
+    * have executed — which is how the plan audits (graft.tools.PlanScan,
+    * PlanDump, PlanShapeSpec) inspect keys whose route executes eagerly.
+    * Only scalar driver reads (counts, argmaxes) still run. Scoped to the
+    * calling thread and the threads it starts. */
+  def auditLazily[A](body: => A): A = lazyAudit.withValue(true)(body)
+
+  /** True inside [[auditLazily]]. */
+  private[ops] def auditing: Boolean = lazyAudit.value
+
+  private val lazyAudit = new scala.util.DynamicVariable[Boolean](false)
 
   private def checkpointLeaves(df: DataFrame) =
     df.queryExecution.analyzed.collect {

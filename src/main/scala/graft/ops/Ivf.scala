@@ -43,7 +43,7 @@ object Ivf {
     * occupancy pinned at ~`targetOccupancy` regardless of corpus size, so
     * per-query serving cost (`nprobe · occupancy` candidates) is a
     * CONSTANT the operator chooses, not a function of n. This is the
-    * 100 TB serving stance ProbeIvfQueries measured: candidate volume per
+    * 100 TB serving stance NOTES.md (round 7) measured: candidate volume per
     * query grew 1.05× under this policy while the corpus grew 10×
     * (fixed nlist grew 10.4×, the √-rule 3.3×). The price is a larger
     * centroid scan (nlist ∝ n) — linear, embarrassingly parallel, and at
@@ -192,36 +192,33 @@ object Ivf {
     * k·dim rows, broadcast), then every vector re-assigned to its
     * max-cosine centroid (ties to the lowest cell id). Cost per round is
     * n·k dot products + one per-vector rank window — linear in n at fixed
-    * k. Each round's corpus-sized assignment becomes its own
-    * `localCheckpoint` with the predecessor freed at once (the pagerank
-    * iteration discipline: the executed plan stays one stage deep per
-    * round, live blocks stay at two corpus-sized tables). A cell that
-    * loses all members simply drops out of the next centroid table — the
-    * standard Lloyd behavior, identical on both engines. Seed assignment:
-    * md5(id) mod k (the [[coarseRanked]] recipe). Returns the final
+    * k. Each round's corpus-sized assignment is staged by [[Iterate]]
+    * with the predecessor freed at once (the executed plan stays one
+    * stage deep per round, live blocks stay at two corpus-sized tables).
+    * A cell that loses all members simply drops out of the next centroid
+    * table — the standard Lloyd behavior, identical on both engines. Seed
+    * assignment: md5(id) mod k (the [[coarseRanked]] recipe). Returns the final
     * assignment (vec_id, embedding, norm, cell), EXECUTED (checkpointed),
     * like the graph keys. */
   def lloyd(vectors: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
     graft.functions.VecDot.register(vectors.sparkSession)
-    var asg = vectors
+    val seeded = vectors
       .withColumn("cell",
         pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10).cast("long"),
           lit(k.toLong)))
       .select(col("vec_id"), col("embedding"), col("norm"), col("cell"))
       .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    val asg = Iterate.rounds(seeded, rounds) { (asg, _) =>
       val cent = centroidsOf(asg)
       val wA = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
-      val next = asg.drop("cell").crossJoin(broadcast(cent))
+      asg.drop("cell").crossJoin(broadcast(cent))
         .withColumn("csim",
           dot(col("embedding"), col("centroid")) / (col("norm") * col("cnorm")))
         .withColumn("rn", row_number().over(wA)).where(col("rn") === 1)
         .select(col("vec_id"), col("embedding"), col("norm"), col("cell"))
-        .localCheckpoint(true)
-      graft.ops.Checkpoints.free(asg)
-      asg = next
     }
+    Checkpoints.free(seeded)
     asg
   }
 

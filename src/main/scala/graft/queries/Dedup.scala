@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.{Checkpoints, Iterate}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,13 +21,6 @@ import org.apache.spark.sql.functions._
   *    arrays (word count is small, so the HOF overhead stays bounded).
   */
 object Dedup {
-
-  /** Free a superseded `localCheckpoint`'s storage blocks immediately —
-    * see [[graft.ops.Checkpoints]] for why lazy (GC-driven) reclamation is
-    * a leak in iterative loops and sequential multi-query JVMs, and why it
-    * caps live storage at one round's working set here. */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    graft.ops.Checkpoints.free(df)
 
   /** Distinct non-empty whitespace tokens: (doc_id, lang, token). Built
     * once per pipeline and shared by every stage. */
@@ -310,19 +304,14 @@ object Dedup {
     // checkpoint-read serialization costs more than the repeated
     // explode-from-parquet passes, which pipeline with their consumers.
     // Left lazy deliberately.
-    jaccardBitmaskFromTok(s, tokens(docs), threshold, presentationSort)
-  }
-
-  /** [[jaccardBitmask]] over a caller-supplied (doc_id, lang, token)
-    * table, plus the presentation-sort switch: internal consumers whose
-    * downstream is an aggregation (llm_lsh_recall buckets the pairs) skip
-    * the final order-by. (Catalyst's EliminateSorts already removes the
-    * interior sort under an aggregation, so the switch is currently
-    * plan-neutral there — it exists to make the intent explicit and to
-    * protect consumers whose shape stops qualifying for the rule.) */
-  private[graft] def jaccardBitmaskFromTok(s: org.apache.spark.sql.SparkSession,
-                     tok: DataFrame, threshold: Double,
-                     presentationSort: Boolean): DataFrame = {
+    //
+    // presentationSort = false lets internal consumers whose downstream is
+    // an aggregation (llm_lsh_recall buckets the pairs) skip the final
+    // order-by. (Catalyst's EliminateSorts already removes the interior
+    // sort under an aggregation, so the switch is currently plan-neutral
+    // there — it makes the intent explicit and protects consumers whose
+    // shape stops qualifying for the rule.)
+    val tok = tokens(docs)
     graft.functions.MaskOps.register(s)
     val (masks, interExpr, cardExpr) = tokenMasks(tok)
     val dfreq = tok.groupBy("token").agg(count(lit(1)).as("df"))
@@ -375,14 +364,21 @@ object Dedup {
   /** Connected components over near-dup pairs: collapse pairwise matches
     * into clusters and elect the minimum doc id as each cluster's
     * canonical representative — the step that turns "similar pairs" into
-    * "keep one copy". Iterative minimum-label propagation:
-    * every node repeatedly adopts the smallest label among itself and its
-    * neighbors until a fixpoint; converges in O(component diameter)
-    * rounds, each round one join + one aggregation. `localCheckpoint`
-    * cuts the growing plan lineage per round (essential for iteration on
-    * Spark). Returns (doc_id, cluster_id = min doc id in the component).
+    * "keep one copy". Returns (id, cluster_id = component minimum).
+    *
+    * Min-label propagation with pointer jumping (path compression): each
+    * round every node adopts the smallest label among itself and its
+    * neighbors, then chases pointers — every label is replaced by its own
+    * label's label — halving pointer-tree depth per round. Convergence is
+    * O(log diameter) instead of plain propagation's O(diameter): a
+    * 1 000-node chain needs ~15 rounds here versus 1 000 (which the
+    * 50-round safety cap would cut off mid-run). The published family is
+    * the MapReduce star-contraction / pointer-doubling line (Kiveris et
+    * al., SOCC'14); this is the pointer-doubling variant over the label
+    * forest. Rounds run through [[graft.ops.Iterate.untilFixpoint]]: each
+    * round's label table is staged, the superseded one freed at once.
     */
-  def clusters(pairs: DataFrame): DataFrame = {
+  def clustersPointerJump(pairs: DataFrame): DataFrame = {
     // Materialize the PAIR list once, BEFORE mirroring it into edges: the
     // union references its input twice, so checkpointing only the union
     // would still execute the (typically expensive — LSH + verification)
@@ -394,11 +390,9 @@ object Dedup {
     val edges = p
       .unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
-    // edges is eagerly materialized above, so the one-directional
-    // projection's blocks are dead weight from here on — free them now.
-    freeCheckpoint(p)
+    Checkpoints.free(p) // edges materialized; the projection is dead weight
     val nodes = edges.select(col("src").as("id")).distinct()
-    var labels = nodes.withColumn("cluster_id", col("id")).localCheckpoint(true)
+    val labels0 = nodes.withColumn("cluster_id", col("id")).localCheckpoint(true)
     // Size gate, measured once: below ~5M nodes the label table is a few
     // tens of MB — broadcast it and the per-round edge join plus the label
     // update run map-side (one shuffle per round instead of three). Above
@@ -406,78 +400,11 @@ object Dedup {
     // impossible, so fall back to plain shuffle joins; the checkpointed
     // plans lack stats, which is why the planner can't make this call
     // itself.
-    val nNodes = labels.count()
+    val nNodes = labels0.count()
     def maybeBc(df: DataFrame): DataFrame =
       if (nNodes < 5000000L) broadcast(df) else df
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 50) {
-      val neighborMin = edges
-        .join(maybeBc(labels.withColumnRenamed("id", "dst2")), col("dst") === col("dst2"))
-        .groupBy(col("src").as("id2")).agg(min("cluster_id").as("nmin"))
-      // The change flag is computed in the SAME select as the new label, so
-      // convergence detection is a scan of the just-materialized checkpoint
-      // — not a second labels⋈next join (which round 1 ran, doubling the
-      // per-round join count).
-      val next = labels.join(maybeBc(neighborMin), col("id") === col("id2"), "left")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"),
-          (coalesce(col("nmin"), col("cluster_id")) < col("cluster_id")).as("chg"))
-        .localCheckpoint(true)
-      changed = next.where(col("chg")).count()
-      // next is materialized (the count above) and lineage-free, so the
-      // previous round's label checkpoint can be reclaimed immediately.
-      freeCheckpoint(labels)
-      labels = next.drop("chg")
-      rounds += 1
-    }
-    freeCheckpoint(edges)
-    // The final labels checkpoint stays persisted — the caller's plan
-    // reads it; its (single, node-sized) block set is reclaimed by the
-    // context cleaner once the result is consumed.
-    labels
-  }
-
-  /** Connected components with pointer jumping (path compression): each
-    * round propagates the neighborhood minimum like [[clusters]], then
-    * additionally chases pointers — every label is replaced by its own
-    * label's label — halving pointer-tree depth per round. Convergence is
-    * O(log diameter) instead of O(diameter): a 1 000-node chain needs ~15
-    * rounds here versus 1 000 under plain propagation (which the 50-round
-    * safety cap would cut off mid-run). The published family is the
-    * MapReduce star-contraction / pointer-doubling line (Kiveris et al.,
-    * SOCC'14); this is the pointer-doubling variant over the label forest.
-    *
-    * Same contract and gates as [[clusters]]: returns (id, cluster_id =
-    * component minimum); label side broadcasts under the measured node
-    * gate, shuffle joins above it. Prefer this for corpora whose duplicate
-    * graphs may contain long paths (chained edits, crawl mirrors);
-    * [[clusters]] does one fewer join per round and matches it on the
-    * dense near-clique graphs LSH verification produces.
-    */
-  /** Observability hook for scale probes (tools/ProbeCcRounds): how many
-    * pointer-jump rounds the LAST [[clustersPointerJump]] call took before
-    * convergence. Probe-only — not part of the API contract, and not
-    * meaningful under concurrent calls. */
-  @volatile private[graft] var lastPointerJumpRounds: Int = -1
-
-  def clustersPointerJump(pairs: DataFrame): DataFrame = {
-    // Same one-directional-checkpoint-first discipline as [[clusters]]:
-    // never execute the pair plan twice just to mirror the edges.
-    val p = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .localCheckpoint(true)
-    val edges = p
-      .unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    freeCheckpoint(p) // edges materialized; the projection is dead weight
-    val nodes = edges.select(col("src").as("id")).distinct()
-    var labels = nodes.withColumn("cluster_id", col("id")).localCheckpoint(true)
-    val nNodes = labels.count()
-    def maybeBc(df: DataFrame): DataFrame =
-      if (nNodes < 5000000L) broadcast(df) else df
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 50) {
+    val labels = Iterate.untilFixpoint(labels0, 50) { (cur, _) =>
+      val labels = cur.drop("chg")
       val neighborMin = edges
         .join(maybeBc(labels.withColumnRenamed("id", "dst2")), col("dst") === col("dst2"))
         .groupBy(col("src").as("id2")).agg(min("cluster_id").as("nmin"))
@@ -490,19 +417,21 @@ object Dedup {
       // join + coalesce covers a label whose node sits in another partition
       // of the forest mid-flight.
       val parents = prop.select(col("id").as("p_id"), col("cluster_id").as("p_cl"))
-      val next = prop.join(maybeBc(parents), col("cluster_id") === col("p_id"), "left")
+      prop.join(maybeBc(parents), col("cluster_id") === col("p_id"), "left")
         .select(col("id"),
           coalesce(col("p_cl"), col("cluster_id")).as("cluster_id"),
           (col("chg") || coalesce(col("p_cl"), col("cluster_id")) < col("cluster_id")).as("chg"))
-        .localCheckpoint(true)
-      changed = next.where(col("chg")).count()
-      freeCheckpoint(labels) // superseded round — reclaim immediately
-      labels = next.drop("chg")
-      rounds += 1
+    } { next =>
+      // the change flag rides in the staged table, so convergence is a
+      // scan of the just-materialized checkpoint, not a second join
+      next.where(col("chg")).count() == 0
     }
-    freeCheckpoint(edges)
-    lastPointerJumpRounds = rounds
-    labels
+    Checkpoints.free(labels0)
+    Checkpoints.free(edges)
+    // The final labels checkpoint stays persisted — the caller's plan
+    // reads it; its (single, node-sized) block set is reclaimed by the
+    // context cleaner once the result is consumed.
+    labels.drop("chg")
   }
 
   /** The production dedup pipeline: MinHash+LSH banding generates
@@ -521,7 +450,7 @@ object Dedup {
     * The band/mask tables feed self-joins (two reads each), so lazily
     * they re-execute per branch. Under honest FOREACH timing this
     * recompute costs 3× the whole query (18–23 s vs 5.6–6.9 s at sf0.1,
-    * tools/ProbeLshPersist) — the earlier "recompute beats checkpoint"
+    * NOTES.md round 7) — the earlier "recompute beats checkpoint"
     * call was a count()-timing artifact (Catalyst pruned the re-executed
     * branches out of the counted plan, the r7 win_interpolate lesson). So
     * `eager = true` (the default) checkpoints the band and mask tables

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.{Checkpoints, Iterate}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,11 +19,24 @@ import org.apache.spark.sql.functions._
   * bounds the wedge explosion at Σ out-deg² ≈ m^1.5 instead of Σ deg².
   *
   * Checkpoint hygiene (r6): every key here materializes its (small,
-  * result-sized) output as its own `localCheckpoint` and then frees the
-  * (edge-sized) intermediate checkpoints via [[graft.ops.Checkpoints]] —
-  * the TrendStore.upsert discipline. Round 5's bench measured what
-  * skipping this costs: un-freed edge blocks from the 5 graph keys taxed
-  * every memory-pressure-sensitive query scheduled after them 3–6×.
+  * result-sized) output as its own checkpoint and then frees the
+  * (edge-sized) intermediate checkpoints via
+  * [[graft.ops.Checkpoints.finishFreeing]] — the TrendStore.upsert
+  * discipline. Round 5's bench measured what skipping this costs: un-freed
+  * edge blocks from the 5 graph keys taxed every memory-pressure-sensitive
+  * query scheduled after them 3–6×. Unlike the rest of the registry (whose
+  * keys return LAZY DataFrames), the graph keys therefore execute at
+  * construction time: the edge-sized checkpoints can only be freed once
+  * nothing lazy still references them, so the result is materialized
+  * first. The result checkpoint is result-sized (top-100 / one row per
+  * part) and is reclaimed by the context cleaner once the caller drops it.
+  *
+  * Every stage goes through [[graft.ops.Checkpoints.stage]] and every
+  * per-round loop through [[graft.ops.Iterate]], so running a key's
+  * registry route inside [[graft.ops.Checkpoints.auditLazily]] returns
+  * the full lazy composition it would execute — the plan the audits
+  * (graft.tools.PlanScan, PlanShapeSpec) judge. Keys with a fixpoint loop
+  * (`graph_kcore`, `graph_cc`) have no such plan and refuse to run there.
   */
 object Graph {
   type Q = (SparkSession, String) => DataFrame
@@ -49,11 +63,10 @@ object Graph {
     * 104 218 → 2 793), which collapses the downstream wedge volume that
     * made the r5 support-1 variants of triangles/common-neighbors the two
     * most expensive keys in the whole bench (36.9 s / 52.7 s at sf0.1).
-    * [[copurchaseEdges]] returns it `localCheckpoint`ed — the CALLER must
-    * free it (via [[finishFreeing]]) once its last consumer has
-    * materialized; [[copurchaseEdgesPlan]] is the same derivation left
-    * lazy, for plan audit ([[auditPlans]]). */
-  private def copurchaseEdgesPlan(s: SparkSession, d: String): DataFrame = {
+    * Returned staged — the CALLER must free it (via
+    * [[graft.ops.Checkpoints.finishFreeing]]) once its last consumer has
+    * materialized. */
+  private def copurchaseEdges(s: SparkSession, d: String): DataFrame = {
     // r13 (guide §2.4): one groupBy collapses lineitem to sorted distinct
     // part-set baskets and the (u < v) pairs are generated INSIDE each
     // ≤8-part basket — replacing the old distinct → count-join → basket
@@ -67,7 +80,7 @@ object Graph {
     // (≤28 pairs/basket) — nothing like the per-token scans of guide §4.
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.groupBy("ok").agg(sort_array(collect_set(col("pk"))).as("pks"))
+    Checkpoints.stage(li.groupBy("ok").agg(sort_array(collect_set(col("pk"))).as("pks"))
       .where(size(col("pks")) <= 8)
       .select(explode(expr(
         """flatten(transform(pks, (x, i) ->
@@ -76,38 +89,18 @@ object Graph {
       .select(col("p.u").as("u"), col("p.v").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("support"))
       .where(col("support") >= 2)
-      .select("u", "v")
+      .select("u", "v"))
   }
 
-  private def copurchaseEdges(s: SparkSession, d: String): DataFrame =
-    copurchaseEdgesPlan(s, d).localCheckpoint(true)
-
-  /** Materialize `result` as its own checkpoint, then free every
-    * checkpoint under each `spent` plan. Unlike the rest of the registry
-    * (whose keys return LAZY DataFrames), the graph keys execute at
-    * construction time and return a checkpointed result — the price of
-    * deterministic intermediate reclamation: the edge-sized checkpoints
-    * can only be freed once nothing lazy still references them, so the
-    * result must be materialized first (`localCheckpoint(true)` truncates
-    * the lineage, making the frees safe). Plan auditing therefore cannot
-    * use the returned DataFrame — [[auditPlans]] carries the
-    * pre-checkpoint compositions for that. The result checkpoint itself
-    * is result-sized (top-100 / one row per part), three orders of
-    * magnitude below the edge tables it replaces, and is reclaimed by the
-    * context cleaner once the caller drops the DataFrame. */
-  private def finishFreeing(result: DataFrame, spent: DataFrame*): DataFrame =
-    graft.ops.Checkpoints.finishFreeing(result, spent: _*)
-
   /** The 5-iteration damped-PageRank composition over `edges`/`deg`.
-    * With `checkpointIters` each iteration's NODE-sized rank table becomes
-    * its own `localCheckpoint` and the superseded one is freed at once:
-    * the executed plan is one stage deep per iteration instead of five
-    * nested join/agg layers of unreused exchanges, and live blocks at any
-    * moment are two node-sized tables rather than the whole unrolled
-    * lineage. Lazy (`checkpointIters = false`) keeps the full composition
-    * for plan audit. */
-  private def pagerankBody(edges: DataFrame, deg: DataFrame, n: Long,
-      checkpointIters: Boolean): DataFrame = {
+    * Each iteration's NODE-sized rank table is staged by
+    * [[graft.ops.Iterate]] and the superseded one freed at once: the
+    * executed plan is one stage deep per iteration instead of five nested
+    * join/agg layers of unreused exchanges, and live blocks at any moment
+    * are two node-sized tables rather than the whole unrolled lineage.
+    * The init projection over `deg` is never freed (Iterate leaves init to
+    * the caller), so `deg`'s own checkpoint survives for later rounds. */
+  private def pagerankBody(edges: DataFrame, deg: DataFrame, n: Long): DataFrame = {
     // The rank/degree tables are NODE-sized; the checkpointed ones carry
     // no stats (a LogicalRDD defaults to "huge"), so without the explicit
     // hint every iteration would shuffle the edge-sized side instead of
@@ -116,21 +109,14 @@ object Graph {
     // big to broadcast and the shuffle join is the honest plan.
     def maybeBc(df: DataFrame): DataFrame =
       if (n < 5000000L) broadcast(df) else df
-    var ranks = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
-    for (i <- 1 to 5) {
-      val next = edges.join(maybeBc(ranks), edges("src") === ranks("node"))
+    val init = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
+    val ranks = Iterate.rounds(init, 5) { (ranks, _) =>
+      edges.join(maybeBc(ranks), edges("src") === ranks("node"))
         .join(maybeBc(deg), "src")
         .select(col("dst"), (col("rank") / col("deg")).as("c"))
         .groupBy("dst").agg(sum("c").as("m"))
         .select(col("dst").as("node"),
           (lit(0.15 / n) + lit(0.85) * col("m")).as("rank"))
-      if (checkpointIters) {
-        val ck = next.localCheckpoint(true)
-        // i=1's predecessor is the init projection over deg — freeing it
-        // would free deg's own checkpoint, still needed by later rounds.
-        if (i > 1) graft.ops.Checkpoints.free(ranks)
-        ranks = ck
-      } else ranks = next
     }
     ranks.select(col("node"), round(col("rank"), 8).as("rank")).orderBy("node")
   }
@@ -145,30 +131,25 @@ object Graph {
     * items" queries at 100 TB: work tracks the seed neighborhood). The
     * restart re-enters through a full-outer join against the seed table
     * (a seed keeps its restart mass even before any walk mass returns).
-    * Same per-iteration checkpoint-and-free and node-table broadcast
-    * gate as [[pagerankBody]]. */
+    * Same per-iteration staging and node-table broadcast gate as
+    * [[pagerankBody]]. */
   private def pprBody(edges: DataFrame, deg: DataFrame, seeds: DataFrame,
-      nSeeds: Long, n: Long, checkpointIters: Boolean): DataFrame = {
+      nSeeds: Long, n: Long): DataFrame = {
     def maybeBc(df: DataFrame): DataFrame =
       if (n < 5000000L) broadcast(df) else df
     val restart = lit(0.15 / nSeeds.toDouble)
-    var ranks = seeds.select(col("node"), lit(1.0 / nSeeds).as("rank"))
-    for (i <- 1 to 5) {
+    val init = seeds.select(col("node"), lit(1.0 / nSeeds).as("rank"))
+    val ranks = Iterate.rounds(init, 5) { (ranks, _) =>
       val m = edges.join(maybeBc(ranks), edges("src") === ranks("node"))
         .join(maybeBc(deg), "src")
         .select(col("dst"), (col("rank") / col("deg")).as("c"))
         .groupBy("dst").agg(sum("c").as("m"))
         .select(col("dst").as("node"), col("m"))
-      val next = m.join(maybeBc(seeds.select(col("node"), lit(1).as("is_seed"))),
+      m.join(maybeBc(seeds.select(col("node"), lit(1).as("is_seed"))),
           Seq("node"), "full_outer")
         .select(col("node"),
           (coalesce(lit(0.85) * col("m"), lit(0.0)) +
             when(col("is_seed").isNotNull, restart).otherwise(lit(0.0))).as("rank"))
-      if (checkpointIters) {
-        val ck = next.localCheckpoint(true)
-        if (i > 1) graft.ops.Checkpoints.free(ranks)
-        ranks = ck
-      } else ranks = next
     }
     ranks.select(col("node"), round(col("rank"), 8).as("rank")).orderBy("node")
   }
@@ -297,18 +278,20 @@ object Graph {
 
   /** 3-round synchronous label propagation over a canonical (u<v) edge
     * list — see the `graph_label_prop` entry for the full design
-    * rationale. */
+    * rationale. Each round's node-sized label table is staged by
+    * [[graft.ops.Iterate]]; the result reads the last one, which the
+    * caller frees with the result. */
   private def labelPropBody(edges: DataFrame, allParts: DataFrame): DataFrame = {
     val sym = edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
-    var labels = sym.select(col("a").as("node")).distinct()
+    val init = sym.select(col("a").as("node")).distinct()
       .withColumn("lbl", col("node"))
-    for (_ <- 1 to 3) {
+    val labels = Iterate.rounds(init, 3) { (labels, _) =>
       val counted = sym.join(labels, sym("b") === labels("node"))
         .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("a").orderBy(col("c").desc, col("lbl").asc)
-      labels = counted.withColumn("rn", row_number().over(w))
+      counted.withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .select(col("a").as("node"), col("lbl"))
     }
@@ -325,28 +308,24 @@ object Graph {
     * round (union + expand), so a lazy 8-round unroll would double the
     * plan per round (2^8 subtrees). */
   private def bfsLevelsBody(edges: DataFrame, allParts: DataFrame): DataFrame = {
-    val sym = edges.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
+    val sym = Checkpoints.stage(edges.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(edges.select(col("v").as("a"), col("u").as("b"))))
     // canonical u < v per edge ⇒ the global minimum node always appears
     // as some edge's u — one tiny driver scalar, like pagerank's N
     val src = edges.agg(min(col("u"))).head().getLong(0)
-    var dist = sym.select(col("a").as("node")).where(col("node") === src)
-      .distinct().withColumn("level", lit(0L)).localCheckpoint(true)
-    for (i <- 1 to 8) {
+    val dist0 = Checkpoints.stage(sym.select(col("a").as("node")).where(col("node") === src)
+      .distinct().withColumn("level", lit(0L)))
+    val dist = Iterate.rounds(dist0, 8) { (dist, _) =>
       val next = sym.join(dist, sym("b") === dist("node"))
         .select(col("a").as("node"), (col("level") + 1).as("level"))
-      val merged = dist.unionByName(next)
+      dist.unionByName(next)
         .groupBy("node").agg(min("level").as("level"))
-        .localCheckpoint(true)
-      graft.ops.Checkpoints.free(dist)
-      dist = merged
     }
     val out = allParts
       .join(dist.withColumnRenamed("node", "part"), Seq("part"), "left")
       .select(col("part"), coalesce(col("level"), lit(-1L)).as("level"))
       .orderBy("part")
-    graft.ops.Checkpoints.finishFreeing(out, sym, dist)
+    Checkpoints.finishFreeing(out, sym, dist0, dist)
   }
 
   /** Capped k-core peel (k = 3, 16 rounds) — see the `graph_kcore` entry
@@ -358,25 +337,26 @@ object Graph {
     * the plan per round). The loop exits early once a round removes
     * nothing: the remaining rounds are provable no-ops, so the early
     * exit is RESULT-identical to the oracle's full 16 unrolled rounds
-    * whether or not the peel has truly converged by round 16. Members
-    * are the endpoints of the final edge list (at fixpoint: exactly the
-    * 3-core), reported with their within-core degree. */
+    * whether or not the peel has truly converged by round 16. The
+    * fixpoint round's stage is the one returned: it equals its
+    * predecessor (pruned ⊆ e and |pruned| = |e|). Members are the
+    * endpoints of the final edge list (at fixpoint: exactly the 3-core),
+    * reported with their within-core degree. */
   private def kcoreBody(edges: DataFrame, allParts: DataFrame): DataFrame = {
-    var e = edges.select("u", "v").localCheckpoint(true)
-    var m = e.count()
-    var round = 0
-    var converged = false
-    while (round < 16 && !converged) {
+    val e0 = Checkpoints.stage(edges.select("u", "v"))
+    var m = e0.count()
+    val e = Iterate.untilFixpoint(e0, 16) { (e, _) =>
       val sym = e.select(col("u").as("w")).unionByName(e.select(col("v").as("w")))
       val keep = sym.groupBy("w").agg(count(lit(1)).as("dg"))
         .where(col("dg") >= 3).select("w")
-      val pruned = e.join(keep.withColumnRenamed("w", "u"), Seq("u"))
+      e.join(keep.withColumnRenamed("w", "u"), Seq("u"))
         .join(keep.withColumnRenamed("w", "v"), Seq("v"))
-        .select("u", "v").localCheckpoint(true)
+        .select("u", "v")
+    } { pruned =>
       val m2 = pruned.count()
-      if (m2 == m) { graft.ops.Checkpoints.free(pruned); converged = true }
-      else { graft.ops.Checkpoints.free(e); e = pruned; m = m2 }
-      round += 1
+      val same = m2 == m
+      m = m2
+      same
     }
     val members = e.select(col("u").as("part")).unionByName(e.select(col("v").as("part")))
       .groupBy("part").agg(count(lit(1)).as("dg"))
@@ -385,7 +365,7 @@ object Graph {
         col("dg").isNotNull.cast("int").as("in_core"),
         coalesce(col("dg"), lit(0L)).as("core_deg"))
       .orderBy("part")
-    graft.ops.Checkpoints.finishFreeing(out, e)
+    Checkpoints.finishFreeing(out, e0, e)
   }
 
   /** Adamic–Adar top-100 over a canonical (u<v) edge list — see the
@@ -487,12 +467,11 @@ object Graph {
     // contribution multiset in different orders (~1e-15 relative drift
     // after 5 rounds).
     "graph_pagerank" -> ((s, d) => {
-      val edges = supplierPartEdges(s, d).localCheckpoint()
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+      val edges = Checkpoints.stage(supplierPartEdges(s, d))
+      val deg = Checkpoints.stage(edges.groupBy("src").agg(count(lit(1)).as("deg")))
       val n = deg.count()
-      val ranks = pagerankBody(edges, deg, n, checkpointIters = true)
-      finishFreeing(ranks, edges, deg, ranks)
+      val ranks = pagerankBody(edges, deg, n)
+      Checkpoints.finishFreeing(ranks, edges, deg, ranks)
     }),
 
     // L1' — personalized PageRank (added r8): the seeded-restart variant
@@ -505,16 +484,14 @@ object Graph {
     // along with the per-seed restart floor. round(8) absorbs the float
     // contribution-sum order drift, the graph_pagerank precedent.
     "graph_ppr" -> ((s, d) => {
-      val edges = supplierPartEdges(s, d).localCheckpoint()
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+      val edges = Checkpoints.stage(supplierPartEdges(s, d))
+      val deg = Checkpoints.stage(edges.groupBy("src").agg(count(lit(1)).as("deg")))
       val n = deg.count()
-      val seeds = deg.select(col("src").as("node"))
+      val seeds = Checkpoints.stage(deg.select(col("src").as("node"))
         .withColumn("h", md5(concat(col("node"), lit("|ppr"))))
-        .orderBy("h", "node").limit(5).select("node")
-        .localCheckpoint(true)
-      val ranks = pprBody(edges, deg, seeds, 5L, n, checkpointIters = true)
-      finishFreeing(ranks, edges, deg, seeds, ranks)
+        .orderBy("h", "node").limit(5).select("node"))
+      val ranks = pprBody(edges, deg, seeds, 5L, n)
+      Checkpoints.finishFreeing(ranks, edges, deg, seeds, ranks)
     }),
 
     // L2 — per-node triangle counts over the SUPPORTED co-purchase graph
@@ -532,7 +509,7 @@ object Graph {
     // the oracle can count the naive a<b<c way.
     "graph_triangles" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
-      finishFreeing(trianglesBody(edges), edges)
+      Checkpoints.finishFreeing(trianglesBody(edges), edges)
     }),
 
     // L2' — per-node local clustering coefficient (added r9): triangle
@@ -546,7 +523,7 @@ object Graph {
     // summary-sized tables beyond the triangle chain itself.
     "graph_clustering_coeff" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
-      finishFreeing(clusteringCoeffBody(edges), edges)
+      Checkpoints.finishFreeing(clusteringCoeffBody(edges), edges)
     }),
 
     // L2'' — degree distribution + CCDF (added r9): the structural-health
@@ -558,13 +535,13 @@ object Graph {
     // (allowlisted), and the total is a broadcast one-row aggregate.
     "graph_degree_dist" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
-      finishFreeing(degreeDistBody(edges), edges)
+      Checkpoints.finishFreeing(degreeDistBody(edges), edges)
     }),
 
     // L16 — ego-network reach (added r12): see [[egoStatsBody]].
     "graph_ego_stats" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
-      finishFreeing(egoStatsBody(edges), edges)
+      Checkpoints.finishFreeing(egoStatsBody(edges), edges)
     }),
 
     // L3 — common-neighbor link prediction (added r5): the 100 strongest
@@ -586,7 +563,7 @@ object Graph {
     // deterministic.
     "graph_common_neighbors" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
-      finishFreeing(commonNeighborsBody(edges), edges)
+      Checkpoints.finishFreeing(commonNeighborsBody(edges), edges)
     }),
 
     // L4 — Adamic–Adar link prediction (added r5): the soft-downweight
@@ -606,7 +583,7 @@ object Graph {
     // every wedge center has deg ≥ 2 so ln(deg) > 0.
     "graph_adamic_adar" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
-      finishFreeing(adamicAdarBody(edges), edges)
+      Checkpoints.finishFreeing(adamicAdarBody(edges), edges)
     }),
 
     // L6 — neighbor-set Jaccard similarity (added r7): the top-100
@@ -625,7 +602,7 @@ object Graph {
     // the top-100 deterministic.
     "graph_jaccard" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
-      finishFreeing(jaccardBody(edges), edges)
+      Checkpoints.finishFreeing(jaccardBody(edges), edges)
     }),
 
     // L7 — community detection via synchronous label propagation
@@ -648,7 +625,8 @@ object Graph {
     "graph_label_prop" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
       val parts = Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct()
-      finishFreeing(labelPropBody(edges, parts), edges)
+      val out = labelPropBody(edges, parts)
+      Checkpoints.finishFreeing(out, edges, out)
     }),
 
     // L10 — degree assortativity (added r8): one number answering "do
@@ -659,7 +637,7 @@ object Graph {
     // in |E| (two degree joins + one global aggregate).
     "graph_assortativity" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
-      finishFreeing(assortativityBody(edges), edges)
+      Checkpoints.finishFreeing(assortativityBody(edges), edges)
     }),
 
     // L11 — modularity of the label-propagation partition (added r8):
@@ -672,7 +650,8 @@ object Graph {
     "graph_modularity" -> ((s, d) => {
       val edges = copurchaseEdges(s, d)
       val parts = Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct()
-      finishFreeing(modularityBody(edges, parts), edges)
+      val out = modularityBody(edges, parts)
+      Checkpoints.finishFreeing(out, edges, out)
     }),
 
     // L12 — HITS hubs & authorities (added r10): see [[hitsBody]].
@@ -692,7 +671,7 @@ object Graph {
       val edges = copurchaseEdges(s, d)
       val parts = Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct()
       val out = katzBody(edges, parts)
-      graft.ops.Checkpoints.free(edges)
+      Checkpoints.free(edges)
       out
     }),
 
@@ -735,7 +714,7 @@ object Graph {
       val edges = copurchaseEdges(s, d)
       val parts = Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct()
       val out = bfsLevelsBody(edges, parts)
-      graft.ops.Checkpoints.free(edges)
+      Checkpoints.free(edges)
       out
     }),
 
@@ -757,7 +736,7 @@ object Graph {
       val edges = copurchaseEdges(s, d)
       val parts = Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct()
       val out = kcoreBody(edges, parts)
-      graft.ops.Checkpoints.free(edges)
+      Checkpoints.free(edges)
       out
     }),
 
@@ -780,8 +759,8 @@ object Graph {
       // clustersPointerJump has materialized its own internal checkpoints
       // and returned a (node-sized) label checkpoint — the edge list has
       // no remaining consumer.
-      graft.ops.Checkpoints.free(edges)
-      finishFreeing(
+      Checkpoints.free(edges)
+      Checkpoints.finishFreeing(
         Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct()
           .join(labels.withColumnRenamed("id", "part"), Seq("part"), "left")
           .select(col("part"),
@@ -790,80 +769,26 @@ object Graph {
         labels)
     }))
 
-  /** Pre-checkpoint LAZY compositions of the graph keys, for plan audit
-    * (graft.tools.PlanScan): identical operator structure to [[queries]]
-    * minus the localCheckpoint materialization, so exchange counts and
-    * join strategies are inspectable WITHOUT executing the query — the
-    * [[queries]] route executes eagerly and returns a bare LogicalRDD
-    * whose plan shows nothing. Planning pagerank's audit form executes
-    * one node-count aggregate (N is a driver-side scalar by design);
-    * nothing else runs. `graph_cc` has no lazy form — its pointer-jump
-    * loop is data-dependently iterative (a round count can't be planned
-    * ahead); its per-round join shape is the one inside
-    * [[Dedup.clustersPointerJump]], exercised by GraphSpec/DedupSpec. */
-  val auditPlans: Map[String, Q] = Map(
-    "graph_pagerank" -> ((s, d) => {
-      val edges = supplierPartEdges(s, d)
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      pagerankBody(edges, deg, deg.count(), checkpointIters = false)
-    }),
-    "graph_ppr" -> ((s, d) => {
-      val edges = supplierPartEdges(s, d)
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      val seeds = deg.select(col("src").as("node"))
-        .withColumn("h", md5(concat(col("node"), lit("|ppr"))))
-        .orderBy("h", "node").limit(5).select("node")
-      pprBody(edges, deg, seeds, 5L, deg.count(), checkpointIters = false)
-    }),
-    "graph_triangles" -> ((s, d) => trianglesBody(copurchaseEdgesPlan(s, d))),
-    "graph_clustering_coeff" ->
-      ((s, d) => clusteringCoeffBody(copurchaseEdgesPlan(s, d))),
-    "graph_degree_dist" -> ((s, d) => degreeDistBody(copurchaseEdgesPlan(s, d))),
-    "graph_ego_stats" -> ((s, d) => egoStatsBody(copurchaseEdgesPlan(s, d))),
-    "graph_common_neighbors" ->
-      ((s, d) => commonNeighborsBody(copurchaseEdgesPlan(s, d))),
-    "graph_adamic_adar" -> ((s, d) => adamicAdarBody(copurchaseEdgesPlan(s, d))),
-    "graph_jaccard" -> ((s, d) => jaccardBody(copurchaseEdgesPlan(s, d))),
-    "graph_hits" -> ((s, d) => hitsBody(s, d, checkpointed = false)),
-    "graph_random_walk" ->
-      ((s, d) => randomWalkBody(s, d, checkpointed = false)),
-    "graph_label_prop" -> ((s, d) => labelPropBody(copurchaseEdgesPlan(s, d),
-      Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct())),
-    "graph_assortativity" -> ((s, d) => assortativityBody(copurchaseEdgesPlan(s, d))),
-    "graph_modularity" -> ((s, d) => modularityBody(copurchaseEdgesPlan(s, d),
-      Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct())),
-    "graph_katz" -> ((s, d) => katzBody(copurchaseEdgesPlan(s, d),
-      Tables.lineitem(s, d).select(col("l_partkey").as("part")).distinct(),
-      checkpointed = false)))
-
   /** L15 — exact truncated-Katz body: 3 rounds of
     * z_{t+1}(i) = 8^(t+1) + Σ_{j~i} z_t(j) over the symmetrized supported
     * edges, all exact longs; readout = z_3 / 8^3, floor-1e-6. Per-round
-    * node-sized checkpoints (the pagerank discipline) unless `checkpointed`
-    * is false (lazy plan-audit twin). */
-  private def katzBody(edges: DataFrame, allParts: DataFrame,
-                       checkpointed: Boolean = true): DataFrame = {
+    * node-sized stages (the pagerank discipline). */
+  private def katzBody(edges: DataFrame, allParts: DataFrame): DataFrame = {
     val sym = edges.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(edges.select(col("v").as("src"), col("u").as("dst")))
-    var z = allParts.select(col("part"), lit(1L).as("z"))
-    if (checkpointed) z = z.localCheckpoint(true)
-    for (t <- 1 to 3) {
+    val z0 = Checkpoints.stage(allParts.select(col("part"), lit(1L).as("z")))
+    val z = Iterate.rounds(z0, 3) { (z, t) =>
       val nbSum = sym.join(z.withColumnRenamed("part", "dst"), "dst")
         .groupBy("src").agg(sum("z").as("nsum"))
         .withColumnRenamed("src", "part")
-      var next = allParts.join(nbSum, Seq("part"), "left")
+      allParts.join(nbSum, Seq("part"), "left")
         .select(col("part"),
           (lit(1L << (3 * t)) + coalesce(col("nsum"), lit(0L))).as("z"))
-      if (checkpointed) {
-        next = next.localCheckpoint(true)
-        graft.ops.Checkpoints.free(z)
-      }
-      z = next
     }
     val out = z.select(col("part"), col("z").as("z3"),
         (floor(col("z").cast("double") / lit(512.0) * 1e6) / 1e6).as("katz"))
       .orderBy("part")
-    if (checkpointed) graft.ops.Checkpoints.finishFreeing(out, z) else out
+    Checkpoints.finishFreeing(out, z0, z)
   }
 
   /** L12 — HITS hubs & authorities (added r10): 2 power iterations over
@@ -878,12 +803,10 @@ object Graph {
     * exact ints. Each iteration = one edge join + node-grain agg — the
     * pagerank shuffle shape; node tables broadcast under the same 5M
     * gate. Scores in [0,1] with the per-side max pinned at exactly 1.0. */
-  private def hitsBody(s: SparkSession, d: String,
-      checkpointed: Boolean = true): DataFrame = {
+  private def hitsBody(s: SparkSession, d: String): DataFrame = {
     val Q = 1000000000L
-    val e0 = Tables.lineitem(s, d)
-      .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk")).distinct()
-    val e = if (checkpointed) e0.localCheckpoint(true) else e0
+    val e = Checkpoints.stage(Tables.lineitem(s, d)
+      .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk")).distinct())
     def maybeBc(df: DataFrame, n: Long): DataFrame =
       if (n < 5000000L) broadcast(df) else df
     val nNodes = e.select(col("sk")).distinct().count() +
@@ -905,7 +828,7 @@ object Graph {
         concat(lit("p"), col("pk")).as("node"),
         (col("nq").cast("double") / Q).as("score")))
       .orderBy("kind", "node")
-    if (checkpointed) finishFreeing(out, e) else out
+    Checkpoints.finishFreeing(out, e)
   }
 
   /** L14 — multi-seed BFS closeness (added r10): see the registry entry.
@@ -936,30 +859,29 @@ object Graph {
     * Final betweenness = per-node fold of its ≤4 seed deltas in seed
     * order, floor-1e-4. */
   private def betweennessBody(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
-    val seeds = sym.select(col("a").as("node")).distinct()
+    val sym = Checkpoints.stage(edges.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(edges.select(col("v").as("a"), col("u").as("b"))))
+    val seeds = Checkpoints.stage(sym.select(col("a").as("node")).distinct()
       .withColumn("h", md5(concat(col("node").cast("string"), lit("|btw"))))
-      .orderBy("h", "node").limit(4).select(col("node").as("seed"))
-      .localCheckpoint(true)
-    var ds = seeds.select(col("seed"), col("seed").as("node"),
-      lit(0).as("level"), lit(1L).as("sigma")).localCheckpoint(true)
-    for (r <- 1 to 8) {
+      .orderBy("h", "node").limit(4).select(col("node").as("seed")))
+    val ds0 = Checkpoints.stage(seeds.select(col("seed"), col("seed").as("node"),
+      lit(0).as("level"), lit(1L).as("sigma")))
+    val ds = Iterate.rounds(ds0, 8) { (ds, r) =>
       val frontier = ds.where(col("level") === r - 1)
       val cand = sym.join(frontier, sym("b") === frontier("node"))
         .groupBy(col("seed"), col("a").as("node"))
         .agg(sum("sigma").as("sigma"))
       val fresh = cand.join(ds.select("seed", "node"), Seq("seed", "node"), "left_anti")
         .select(col("seed"), col("node"), lit(r).as("level"), col("sigma"))
-      val merged = ds.unionByName(fresh).localCheckpoint(true)
-      graft.ops.Checkpoints.free(ds)
-      ds = merged
+      ds.unionByName(fresh)
     }
     // horizon rim: level-8 nodes have no finalized successors — δ = 0
-    var finalized = ds.where(col("level") === 8)
-      .withColumn("delta", lit(0.0)).localCheckpoint(true)
-    for (lvl <- 7 to 0 by -1) {
+    val rim = Checkpoints.stage(ds.where(col("level") === 8)
+      .withColumn("delta", lit(0.0)))
+    // round i finalizes level 8 - i: strictly downward, so every δw a
+    // level reads is already final
+    val finalized = Iterate.rounds(rim, 8) { (finalized, i) =>
+      val lvl = 8 - i
       val upper = finalized.where(col("level") === lvl + 1)
         .select(col("seed"), col("node").as("w"),
           col("sigma").as("sw"), col("delta").as("dw"))
@@ -978,9 +900,7 @@ object Graph {
         .join(folded, Seq("seed", "node"), "left")
         .select(col("seed"), col("node"), col("level"), col("sigma"),
           coalesce(col("delta"), lit(0.0)).as("delta"))
-      val merged = finalized.unionByName(lvlDone).localCheckpoint(true)
-      graft.ops.Checkpoints.free(finalized)
-      finalized = merged
+      finalized.unionByName(lvlDone)
     }
     val out = finalized.where(col("node") =!= col("seed"))
       .groupBy("node")
@@ -990,27 +910,22 @@ object Graph {
       .select(col("node"), col("n_seeds"),
         (floor(col("bc") * 1e4) / 1e4).as("betweenness"))
       .orderBy("node")
-    graft.ops.Checkpoints.finishFreeing(out, edges, sym, seeds, ds, finalized)
+    Checkpoints.finishFreeing(out, edges, sym, seeds, ds0, ds, rim, finalized)
   }
 
   private def closenessBody(edges: DataFrame): DataFrame = {
-    val sym = edges.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
-      .localCheckpoint(true)
-    val seeds = sym.select(col("a").as("node")).distinct()
+    val sym = Checkpoints.stage(edges.select(col("u").as("a"), col("v").as("b"))
+      .unionByName(edges.select(col("v").as("a"), col("u").as("b"))))
+    val seeds = Checkpoints.stage(sym.select(col("a").as("node")).distinct()
       .withColumn("h", md5(concat(col("node").cast("string"), lit("|close"))))
-      .orderBy("h", "node").limit(4).select(col("node").as("seed"))
-      .localCheckpoint(true)
-    var dist = seeds.select(col("seed"), col("seed").as("node"), lit(0L).as("level"))
-      .localCheckpoint(true)
-    for (_ <- 1 to 8) {
+      .orderBy("h", "node").limit(4).select(col("node").as("seed")))
+    val dist0 = Checkpoints.stage(
+      seeds.select(col("seed"), col("seed").as("node"), lit(0L).as("level")))
+    val dist = Iterate.rounds(dist0, 8) { (dist, _) =>
       val next = sym.join(dist, sym("b") === dist("node"))
         .select(col("seed"), col("a").as("node"), (col("level") + 1).as("level"))
-      val merged = dist.unionByName(next)
+      dist.unionByName(next)
         .groupBy("seed", "node").agg(min("level").as("level"))
-        .localCheckpoint(true)
-      graft.ops.Checkpoints.free(dist)
-      dist = merged
     }
     val out = dist.groupBy("seed")
       .agg(count(lit(1)).as("n_reached"),
@@ -1021,7 +936,7 @@ object Graph {
           floor((col("n_reached") - 1).cast("double")
             / col("sum_dist").cast("double") * 1e4) / 1e4).as("closeness"))
       .orderBy("seed")
-    graft.ops.Checkpoints.finishFreeing(out, edges, sym, seeds, dist)
+    Checkpoints.finishFreeing(out, edges, sym, seeds, dist0, dist)
   }
 
   /** L13 — deterministic random walks (added r10): one 4-hop walk from
@@ -1034,32 +949,28 @@ object Graph {
     * hop is ONE join of the walk-frontier against the edge list + a
     * struct-min argmin — frontier stays start-set-sized at every hop
     * (walks never fork), broadcast under the pagerank 5M gate. */
-  private def randomWalkBody(s: SparkSession, d: String,
-      checkpointed: Boolean = true): DataFrame = {
-    val e = if (checkpointed) supplierPartEdges(s, d).localCheckpoint(true)
-            else supplierPartEdges(s, d)
+  private def randomWalkBody(s: SparkSession, d: String): DataFrame = {
+    val e = Checkpoints.stage(supplierPartEdges(s, d))
     def maybeBc(df: DataFrame, n: Long): DataFrame =
       if (n < 5000000L) broadcast(df) else df
-    val starts0 = e.select(col("src")).where(col("src").startsWith("s"))
-      .distinct().select(col("src").as("walk"), col("src").as("cur"))
-    val starts = if (checkpointed) starts0.localCheckpoint(true) else starts0
+    val starts = Checkpoints.stage(e.select(col("src")).where(col("src").startsWith("s"))
+      .distinct().select(col("src").as("walk"), col("src").as("cur")))
     val nStarts = starts.count()
     var pos = starts
     // hop tables are start-set-sized checkpoints; all four feed the final
     // join, so none is freed mid-loop — finishFreeing reclaims the lot
     // once the result has materialized
     val hops = (1 to 4).map { i =>
-      val nxt0 = maybeBc(pos, nStarts).join(e, pos("cur") === e("src"))
+      val nxt = Checkpoints.stage(maybeBc(pos, nStarts).join(e, pos("cur") === e("src"))
         .withColumn("h", md5(concat(col("walk"), lit(s":$i:"), col("dst"))))
         .groupBy("walk").agg(min(struct(col("h"), col("dst"))).as("b"))
-        .select(col("walk"), col("b.dst").as("cur"))
-      val nxt = if (checkpointed) nxt0.localCheckpoint(true) else nxt0
+        .select(col("walk"), col("b.dst").as("cur")))
       pos = nxt
       nxt.select(col("walk"), col("cur").as(s"hop$i"))
     }
     val out = hops.foldLeft(starts.select("walk"))((acc, h) => acc.join(h, "walk"))
       .orderBy("walk")
-    if (checkpointed) finishFreeing(out, (Seq(e, starts) ++ hops): _*) else out
+    Checkpoints.finishFreeing(out, (Seq(e, starts) ++ hops): _*)
   }
 
   val oracles: Map[String, String] = {

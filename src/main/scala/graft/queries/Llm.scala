@@ -379,7 +379,7 @@ object Llm {
     * pair join on an LSH cell so candidate generation is an equi-join.
     * Sized so the all-pairs side stays ~10^9 candidate pairs max.
     *
-    * Boundary audited r4 (`tools.ProfGate`, sf0.1 = 5 000 docs / 2 000
+    * Boundary audited r4 (NOTES.md round 4, sf0.1 = 5 000 docs / 2 000
     * vectors, 3-rep medians): the exact side is the RIGHT side at bench
     * scale — simhash all-pairs 1.43 s vs banded 2.42 s (identical 992 384
     * rows; 16-value bands collide heavily at small n, so banding only wins
@@ -734,18 +734,17 @@ object Llm {
         col("norm").as("b_n")), "nb")
       .withColumn("sim", dot(col("a_e"), col("b_e")) / (col("a_n") * col("b_n")))
     val wTop = Window.partitionBy("node").orderBy(col("sim").desc, col("nb"))
-    var nb = own.unionByName(nxt).distinct().localCheckpoint(true)
-    for (_ <- 1 to 2) {
+    val nb0 = own.unionByName(nxt).distinct().localCheckpoint(true)
+    val nb = graft.ops.Iterate.rounds(nb0, 2) { (nb, _) =>
       val hop2 = nb.join(nb.select(col("node").as("mid"), col("nb").as("nb2")),
           col("nb") === col("mid"))
         .select(col("node"), col("nb2").as("nb"))
       val cand = nb.unionByName(hop2).where(col("nb") =!= col("node")).distinct()
-      val next = scored(cand)
+      scored(cand)
         .withColumn("rk", row_number().over(wTop)).where(col("rk") <= 4)
-        .select("node", "nb").localCheckpoint(true)
-      graft.ops.Checkpoints.free(nb)
-      nb = next
+        .select("node", "nb")
     }
+    graft.ops.Checkpoints.free(nb0)
     (nb, members)
   }
 
@@ -830,8 +829,8 @@ object Llm {
     * is returned still checkpointed — the caller frees it. */
   private def greedyHops(v: DataFrame, nb: DataFrame,
                          st0: DataFrame, hops: Int): DataFrame = {
-    var st = st0.localCheckpoint(true)
-    for (_ <- 1 to hops) {
+    val init = st0.localCheckpoint(true)
+    val st = graft.ops.Iterate.rounds(init, hops) { (st, _) =>
       val best = st.select(col("q_id").as("b_q"), col("q_e").as("b_e"),
           col("q_n").as("b_n"), col("cur"))
         .join(nb.withColumnRenamed("node", "cur"), "cur")
@@ -843,15 +842,13 @@ object Llm {
         .where(col("rk") === 1)
         .select(col("b_q").as("q_id"), col("nb").as("best"), col("nsim").as("best_sim"))
       val moved = col("best_sim") > col("cur_sim")
-      val next = st.join(best, Seq("q_id"), "left")
+      st.join(best, Seq("q_id"), "left")
         .select(col("q_id"), col("q_e"), col("q_n"),
           when(moved, col("best")).otherwise(col("cur")).as("cur"),
           when(moved, col("best_sim")).otherwise(col("cur_sim")).as("cur_sim"),
           (col("hops") + when(moved, 1).otherwise(0)).as("hops"))
-        .localCheckpoint(true)
-      graft.ops.Checkpoints.free(st)
-      st = next
     }
+    graft.ops.Checkpoints.free(init)
     st
   }
 
@@ -3071,12 +3068,13 @@ object Llm {
         .select(col("q_id"), col("c_id"), col("c_e"), col("c_n"), col("rel"))
         .localCheckpoint(true)
       val wS = Window.partitionBy("q_id").orderBy(col("score").desc, col("c_id"))
-      var selected = cands.withColumn("score", col("rel"))
+      val seed = cands.withColumn("score", col("rel"))
         .withColumn("rn", row_number().over(wS)).where(col("rn") === 1)
         .select(col("q_id"), col("c_id"), col("c_e"), col("c_n"),
           lit(1).as("rank"), col("score"))
         .localCheckpoint(true)
-      for (i <- 2 to 5) {
+      // round r picks rank r + 1
+      val selected = graft.ops.Iterate.rounds(seed, 4) { (selected, r) =>
         val rem = cands.join(selected.select("q_id", "c_id"),
           Seq("q_id", "c_id"), "left_anti")
         val ms = rem.join(selected.select(col("q_id"),
@@ -3087,16 +3085,14 @@ object Llm {
           .withColumn("score", lit(0.5d) * col("rel") - lit(0.5d) * col("maxsim"))
           .withColumn("rn", row_number().over(wS)).where(col("rn") === 1)
           .select(col("q_id"), col("c_id"), col("c_e"), col("c_n"),
-            lit(i).as("rank"), col("score"))
-        val next = selected.unionByName(pick).localCheckpoint(true)
-        graft.ops.Checkpoints.free(selected)
-        selected = next
+            lit(r + 1).as("rank"), col("score"))
+        selected.unionByName(pick)
       }
       graft.ops.Checkpoints.finishFreeing(
         selected.select(col("q_id"), col("rank"), col("c_id"),
             (floor(col("score") * 1e4) / 1e4).as("score"))
           .orderBy("q_id", "rank"),
-        cands, selected)
+        cands, seed, selected)
     }),
 
     // K3h — SemDeDup (Abbas et al. 2023): semantic dedup over embedding
@@ -3589,7 +3585,7 @@ object Llm {
     // pair volume is Q·occupancy·nprobe: per-query cost is a function of
     // cell occupancy (corpus/nlist), NOT corpus size — scale nlist with
     // the corpus and serving cost per query is flat (measured across
-    // nlist policies in tools/ProbeIvfQueries). LEFT join keeps a
+    // nlist policies, NOTES.md round 7). LEFT join keeps a
     // sampled query whose probed cells hold no other member as a
     // null-neighbor row, exactly like the probe key.
     "llm_ivf_query" -> ((s, d) => {
@@ -3623,7 +3619,7 @@ object Llm {
     //   - occupancy-pinned index: nlist = max(16, n/50) (Ivf.
     //     occupancyNlist) keeps ~50 vectors per cell at ANY corpus size,
     //     so a query's candidate volume is nprobe·50 forever — the
-    //     ProbeIvfQueries policy that measured 1.05× cand/query under
+    //     policy NOTES.md (round 7) measured at 1.05× cand/query under
     //     10× corpus growth, vs 10.4× at fixed nlist.
     // The corpus count that sizes nlist is one cheap aggregate (the
     // measured-gate discipline); both engines derive the SAME nlist from
@@ -5400,13 +5396,13 @@ object Llm {
     * a greedy left-to-right fold rewrite of every word's symbols with
     * per-round checkpoint-and-free. Returns (round, a, b, pair_count). */
   private def bpeMerges(s: SparkSession, d: String): Seq[(Long, String, String, Long)] = {
-    var vocab = tokensAll(s, d).groupBy("token").agg(count(lit(1)).as("cnt"))
+    val vocab0 = tokensAll(s, d).groupBy("token").agg(count(lit(1)).as("cnt"))
       .where(length(col("token")) >= 2)
       .select(col("cnt"), expr(
         "transform(sequence(1, length(token)), i -> substring(token, i, 1))").as("syms"))
       .localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    for (r <- 1 to 4) {
+    val vocab = graft.ops.Iterate.rounds(vocab0, 4) { (vocab, r) =>
       val pairs = vocab
         .where(size(col("syms")) >= 2)
         .select(col("cnt"), explode(expr(
@@ -5418,15 +5414,13 @@ object Llm {
       require(top.nonEmpty, "BPE merge frontier empty before round 4 — corpus too small")
       val (a, b, pcnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
       merges += ((r.toLong, a, b, pcnt))
-      val next = vocab.select(col("cnt"),
+      vocab.select(col("cnt"),
         aggregate(col("syms"), typedLit(Seq.empty[String]), (acc, x) =>
           when(size(acc) > 0 && element_at(acc, -1) === lit(a) && x === lit(b),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
             .otherwise(concat(acc, array(x)))).as("syms"))
-        .localCheckpoint(true)
-      graft.ops.Checkpoints.free(vocab)
-      vocab = next
     }
+    graft.ops.Checkpoints.free(vocab0)
     graft.ops.Checkpoints.free(vocab)
     merges.toSeq
   }
@@ -5791,15 +5785,15 @@ object Llm {
       |  JOIN words wb ON wb.vec_id = qb.vec_id
       |)""".stripMargin
 
-  /** Pre-checkpoint LAZY twins for plan audit (PlanScan/PlanShapeSpec) —
-    * same contract as [[Graph.auditPlans]]: identical operator structure
-    * to [[queries]] minus the eager checkpoint materialization, so
-    * exchange counts, join strategies, and window placement stay
-    * inspectable after the r7 foreach-trade change made the registry
-    * routes return checkpointed results. The clusters/survivors keys have
-    * no lazy whole-plan (pointer jumping is data-dependently iterative —
-    * the graph_cc situation); their pair-construction plan is
-    * llm_dedup_lsh_verified's own, audited here. */
+  /** Pre-checkpoint LAZY twins for plan audit (PlanScan/PlanShapeSpec):
+    * identical operator structure to [[queries]] minus the eager
+    * checkpoint materialization, so exchange counts, join strategies, and
+    * window placement stay inspectable after the r7 foreach-trade change
+    * made the registry routes return checkpointed results. The
+    * clusters/survivors keys have no lazy whole-plan (pointer jumping is
+    * data-dependently iterative — the graph_cc situation); their
+    * pair-construction plan is llm_dedup_lsh_verified's own, audited
+    * here. */
   val auditPlans: Map[String, Q] = Map(
     "llm_dedup_lsh_verified" -> ((s, d) =>
       Dedup.lshVerified(s, Tables.documents(s, d), threshold = 0.5,
@@ -5905,7 +5899,7 @@ object Llm {
         |FROM bk ORDER BY bucket""".stripMargin,
     // Connected components in SQL: WITH RECURSIVE computes each node's
     // reachable set; a component's id is the minimum reachable node —
-    // exactly the fixpoint Dedup.clusters' min-label propagation reaches.
+    // exactly the fixpoint Dedup.clustersPointerJump reaches.
     // Pair generation repeats the lshVerified CTEs (band candidates +
     // exact Jaccard) at the 0.9 near-identical threshold, matching the
     // key's sub-quadratic pair source.

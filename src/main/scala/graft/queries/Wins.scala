@@ -142,7 +142,7 @@ object Wins {
     // a [currentRow, unboundedFollowing] frame: Spark re-aggregates a
     // SHRINKING frame from scratch for every row (aggregates can't be
     // un-merged), which is O(partition²) work — measured 27 s foreach at
-    // sf0.1 vs 1.7 s for the running direction (r7 ProbeInterp). Instead
+    // sf0.1 vs 1.7 s for the running direction (NOTES.md round 7). Instead
     // the grid is sorted DESCENDING and the same running
     // [unboundedPreceding, currentRow] last() frame reads the forward
     // neighbor — `h` is unique per user on the grid, so the reversed

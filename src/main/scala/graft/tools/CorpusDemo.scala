@@ -29,7 +29,7 @@ object CorpusDemo {
     val keepExact = SparkEntry.queries("llm_dedup_exact")(spark, sfDir).select("keep_id")
     val exactKept = docs.join(keepExact, col("doc_id") === col("keep_id")).drop("keep_id")
     val nearPairs = graft.queries.Dedup.jaccardBitmask(spark, exactKept, threshold = 0.9)
-    val dupMembers = graft.queries.Dedup.clusters(nearPairs)
+    val dupMembers = graft.queries.Dedup.clustersPointerJump(nearPairs)
       .where(col("id") =!= col("cluster_id")) // non-canonical members drop
       .select(col("id").as("drop_id"))
     val deduped = exactKept.join(dupMembers, col("doc_id") === col("drop_id"), "left_anti")

@@ -9,10 +9,11 @@ import graft.SparkEntry
   * Usage: `sbt "runMain graft.tools.PlanDump <outDir> <tag> <key>[,<key>...]"`.
   *
   * Keys whose registry route executes eagerly (graph family / eager dedup
-  * staging) are dumped via their lazy pre-checkpoint twins from
-  * [[PlanScan.auditOverrides]] — the same plan PlanShapeSpec judges —
-  * because the registry route's returned frame is a LogicalRDD scan whose
-  * formatted plan would be vacuous. Streaming keys have no batch plan
+  * staging) are dumped through [[PlanScan.auditOverrides]] — a graph key's
+  * own route run lazily under `Checkpoints.auditLazily`, a dedup key's
+  * lazy twin; the same plan PlanShapeSpec judges — because the registry
+  * route's returned frame is a LogicalRDD scan whose formatted plan would
+  * be vacuous. Streaming keys have no batch plan
   * (IncrementalExecution) and are skipped with a stub note. */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -29,7 +29,6 @@ class EdgeCasesSpec extends SparkSpec {
 
   test("connected components over an empty pair set is empty") {
     val pairs = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
-    assert(Dedup.clusters(pairs).isEmpty)
     assert(Dedup.clustersPointerJump(pairs).isEmpty)
   }
 

@@ -64,13 +64,13 @@ class HarnessSpec extends SparkSpec {
     assert((streaming -- graft.tools.PlanScan.skipKeys).isEmpty,
       s"streaming keys PlanScan would drain: ${streaming -- graft.tools.PlanScan.skipKeys}")
     // the only non-streaming skips are the documented side-effect keys
-    // plus graph_cc, whose data-dependently iterative pointer-jump loop
-    // has no lazy whole-query plan (the other graph keys audit via
-    // Graph.auditPlans — see PlanScan.skipKeys' doc)
-    // graph_cc's pointer-jump loop is data-dependently iterative;
-    // graph_bfs_levels' dist relation is referenced twice per round, so
-    // its lazy 8-round unroll would double the plan per round (2^8
-    // subtrees) — both audit their per-round join shape in GraphSpec
+    // plus the graph keys with no auditable lazy plan: graph_cc and
+    // graph_kcore loop to a data-dependent fixpoint; graph_bfs_levels,
+    // graph_closeness and graph_betweenness read their per-round table
+    // twice per round, so a lazy 8-round unroll doubles the plan per
+    // round (2^8 subtrees). The other graph keys are audited through
+    // their own registry route under Checkpoints.auditLazily — see
+    // PlanScan.skipKeys' doc
     val sideEffect = graft.tools.PlanScan.skipKeys -- streaming
     assert(sideEffect == Set("scan_csv_typed", "scan_csv_malformed", "scan_jsonl",
       "scan_xml_typed", "sink_partitioned", "join_bucketed", "scan_binary",

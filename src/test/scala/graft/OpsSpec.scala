@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Skew
+import graft.ops.{Checkpoints, Iterate, Skew}
 import graft.sources.MeasurementXml
 import graft.store.Compaction
 
@@ -62,6 +62,73 @@ class OpsSpec extends SparkSpec {
     graft.ops.Checkpoints.free(df)
     assert(!spark.sparkContext.getPersistentRDDs.contains(rddId),
       "free must drop the RDD from the persistence registry without waiting for GC")
+  }
+
+  private def checkpointIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+
+  test("Iterate.rounds leaves only the caller's init and the returned stage persisted") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val init = spark.range(100).toDF("id").localCheckpoint(true)
+    val seen = scala.collection.mutable.ArrayBuffer[Int]()
+    val out = Iterate.rounds(init, 4) { (cur, i) =>
+      seen += i
+      cur.select((col("id") + i).as("id"))
+    }
+    assert(seen == Seq(1, 2, 3, 4), "rounds run once each, in order")
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before ==
+      checkpointIds(init) ++ checkpointIds(out),
+      "every intermediate stage must be freed; init and the result must not")
+    assert(out.agg(sum("id")).head().getLong(0) == (0 until 100).sum + 100L * (1 + 2 + 3 + 4))
+    Checkpoints.free(init)
+    Checkpoints.free(out)
+  }
+
+  test("Iterate.untilFixpoint stops at the first round where done holds and never passes its cap") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val init = spark.range(10).toDF("id").localCheckpoint(true)
+    def maxId(df: org.apache.spark.sql.DataFrame) = df.agg(max("id")).head().getLong(0)
+    var stepped = 0
+    val hit = Iterate.untilFixpoint(init, 10) { (cur, _) =>
+      stepped += 1
+      cur.select((col("id") + 1).as("id"))
+    } (next => maxId(next) >= 12)
+    assert(stepped == 3 && maxId(hit) == 12, s"stopped after $stepped rounds")
+    var capped = 0
+    val last = Iterate.untilFixpoint(init, 5) { (cur, _) =>
+      capped += 1
+      cur.select((col("id") + 1).as("id"))
+    } (_ => false)
+    assert(capped == 5 && maxId(last) == 14, s"ran $capped rounds under a cap of 5")
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before ==
+      checkpointIds(init) ++ checkpointIds(hit) ++ checkpointIds(last))
+    Seq(init, hit, last).foreach(Checkpoints.free)
+  }
+
+  test("inside auditLazily graph keys return their lazy plan and persist nothing; fixpoints refuse") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Seq("graph_pagerank", "graph_katz").foreach { k =>
+      val audited = Checkpoints.auditLazily(SparkEntry.queries(k)(spark, sf0001))
+      assert(checkpointIds(audited).isEmpty, s"$k: audited plan still reads a checkpoint")
+      assert(spark.sparkContext.getPersistentRDDs.keySet -- before == Set.empty,
+        s"$k: the audit persisted blocks")
+      // the audited plan is the shipped plan: it computes the same answer
+      val shipped = SparkEntry.queries(k)(spark, sf0001)
+      assert(audited.collect().toSeq == shipped.collect().toSeq, k)
+      Checkpoints.freeAll(shipped)
+    }
+    val msg = "Iterate.untilFixpoint has no lazy plan"
+    val e1 = intercept[IllegalArgumentException] {
+      Checkpoints.auditLazily(
+        Iterate.untilFixpoint(spark.range(3).toDF("id"), 4)((d, _) => d)(_ => true))
+    }
+    assert(e1.getMessage.contains(msg))
+    val e2 = intercept[IllegalArgumentException] {
+      Checkpoints.auditLazily(SparkEntry.queries("graph_kcore")(spark, sf0001))
+    }
+    assert(e2.getMessage.contains(msg))
   }
 
   test("distributed global rank equals the single-partition window, incl. ntile") {
