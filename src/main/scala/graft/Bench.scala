@@ -31,15 +31,20 @@ object Bench {
     * [[renderLine]]) — which round 3 showed hides regressions in the other
     * ~110: a key invisible in the `_others` rollup can silently grow 5×.
     * So every run also writes the COMPLETE per-key map (sorted by key, 2 ms
-    * resolution) to a committed artifact for round-over-round diffing. */
-  def writeFull(results: Seq[(String, Double)], sfDir: String, path: String): Unit = {
+    * resolution) to a committed artifact for round-over-round diffing.
+    * `_failed` lists the keys that threw (sorted); their seconds are the
+    * time to the failure, not a result. */
+  def writeFull(results: Seq[(String, Double)], failed: Seq[String], sfDir: String,
+                path: String): Unit = {
     def f(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val sfTag = new java.io.File(sfDir).getName
     val body = results.sortBy(_._1)
       .map { case (k, v) => s"""  "$k": ${f(v)}""" }.mkString(",\n")
     val total = f(results.map(_._2).sum)
+    val failedJson = failed.distinct.sorted.map(k => s""""$k"""").mkString("[", ", ", "]")
     val json =
-      s"""{\n  "_total_sec": $total,\n  "_sf": "$sfTag",\n  "_keys": ${results.size},\n$body\n}\n"""
+      s"""{\n  "_total_sec": $total,\n  "_sf": "$sfTag",\n  "_keys": ${results.size},\n""" +
+        s"""  "_failed": $failedJson,\n$body\n}\n"""
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
@@ -58,6 +63,7 @@ object Bench {
     // reader) so init cost isn't charged to whichever query runs first.
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // Streaming keys carry several seconds of per-run checkpoint-I/O
       // noise (a measured 76–93 s total spread in round 2 — the dominant
@@ -75,7 +81,12 @@ object Bench {
         // O(partition²) frame for six rounds (27 s of real cost billed as
         // 0.34 s). foreach forces every operator and materializes every
         // output column — the number a user's query actually costs.
-        try { fn(spark, sfDir).foreach(_ => ()) } catch { case _: Throwable => () }
+        try fn(spark, sfDir).foreach(_ => ())
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            failed += name
+        }
         val t = (System.nanoTime() - t0) / 1e9
         // Measurement-isolation sweep (r12, guide §5), OUTSIDE the timed
         // window: a finished rep's result/staged localCheckpoint blocks are
@@ -93,7 +104,7 @@ object Bench {
       }.sorted
       name -> (if (name.startsWith("stream_")) times(times.size / 2) else times.head)
     }
-    writeFull(results, sfDir,
+    writeFull(results, failed.toSeq, sfDir,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_full.json"))
     println(renderLine(results, sfDir))
     spark.stop()

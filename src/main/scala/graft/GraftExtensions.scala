@@ -1,116 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CdcCuts, HashOps, MaskCard, MaskIntersect, MaskOps, Md5Bits, Md5Words, Mh8, VecDot}
+import graft.functions.Kernels
 
-/** Session-extension entry point: the production registration path for the
-  * library's custom Catalyst expressions, activated with
+/** Session-extension entry point for the library's custom Catalyst
+  * functions, activated with
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
   * `SparkSession.builder.withExtensions(new GraftExtensions)`).
   *
-  * Unlike `VecDot.register` (a temp-function on one session), functions
-  * injected here are part of every session state built over the context —
-  * including `spark.newSession()` children — which is what a cluster
-  * deployment wants: set one config, every session sees `vec_dot`.
+  * It injects every entry of the [[graft.functions.Kernels]] catalogue, so
+  * each session state built over the context resolves them, including
+  * `spark.newSession()` children: set one config and every session sees
+  * `vec_dot`. A session built without it gets the same table through
+  * `Kernels.ensure`, which `SparkEntry.queries` runs before every key.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(
-        classOf[VecDot].getName,
-        null,
-        "vec_dot",
-        "vec_dot(a, b) - dot product of two array<float|double> vectors, accumulated left-to-right in double.",
-        ""),
-      (children: Seq[Expression]) => VecDot.builder(children)))
-    ext.injectFunction((
-      FunctionIdentifier("mask_intersect"),
-      new ExpressionInfo(
-        classOf[MaskIntersect].getName,
-        null,
-        "mask_intersect",
-        "mask_intersect(a, b) - popcount of the bitwise AND of two array<bigint> bitmasks.",
-        ""),
-      (children: Seq[Expression]) => MaskOps.intersectExpr(children)))
-    ext.injectFunction((
-      FunctionIdentifier("mask_card"),
-      new ExpressionInfo(
-        classOf[MaskCard].getName,
-        null,
-        "mask_card",
-        "mask_card(a) - total popcount of an array<bigint> bitmask.",
-        ""),
-      (children: Seq[Expression]) => MaskOps.cardExpr(children)))
-    ext.injectFunction((
-      FunctionIdentifier("md5_bits"),
-      new ExpressionInfo(
-        classOf[Md5Bits].getName,
-        null,
-        "md5_bits",
-        "md5_bits(s, start, len) - hex window [start, start+len) of md5(s) as an unsigned long; " +
-          "bit-identical to CAST(conv(substring(md5(s), start, len), 16, 10) AS BIGINT).",
-        ""),
-      (children: Seq[Expression]) => HashOps.md5BitsExpr(children)))
-    ext.injectFunction((
-      FunctionIdentifier("mh8_md5"),
-      new ExpressionInfo(
-        classOf[Mh8].getName,
-        null,
-        "mh8_md5",
-        "mh8_md5(s) - array(md5('0:'||s), ..., md5('7:'||s)) as lowercase hex.",
-        ""),
-      (children: Seq[Expression]) => HashOps.mh8Expr(children)))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_cuts"),
-      new ExpressionInfo(
-        classOf[CdcCuts].getName,
-        null,
-        "cdc_cuts",
-        "cdc_cuts(s) - 1-based char positions i in [2, len-7] where the 60-bit md5 prefix of the " +
-          "8-char window at i is divisible by 32 (content-defined chunk boundaries).",
-        ""),
-      (children: Seq[Expression]) => HashOps.cdcCutsExpr(children)))
-    ext.injectFunction((
-      FunctionIdentifier("md5_words"),
-      new ExpressionInfo(
-        classOf[Md5Words].getName,
-        null,
-        "md5_words",
-        "md5_words(s) - the four 32-bit words of md5(s) as unsigned longs; word m+1 is " +
-          "bit-identical to CAST(conv(substring(md5(s), 8m+1, 8), 16, 10) AS BIGINT).",
-        ""),
-      (children: Seq[Expression]) => HashOps.md5WordsExpr(children)))
-    // Spark ships BloomFilterAggregate / BloomFilterMightContain for its
-    // own runtime join filtering but does not register them publicly;
-    // surfacing them here gives the library a broadcastable membership
-    // prefilter (llm_bloom_decontaminate) without a per-row UDF — the
-    // aggregate is mergeable (map-side partials), the probe codegens.
-    ext.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        null,
-        "bloom_agg",
-        "bloom_agg(xxhash64(x), estimatedNumItems) - build a bloom filter over hashed values.",
-        ""),
-      (children: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        null,
-        "bloom_might_contain",
-        "bloom_might_contain(bf, xxhash64(x)) - membership probe; false = definitely absent.",
-        ""),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit = Kernels.all.foreach(ext.injectFunction)
 }

@@ -14,9 +14,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("agg_groupby")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Rel.queries ++
+  /** One entry per implemented operator from SURVEY.md §2. Each route
+    * first installs whatever [[graft.functions.Kernels]] the session lacks,
+    * so every key runs on a session built without `spark.sql.extensions`. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (graft.queries.Rel.queries ++
       graft.queries.Geo.queries ++
       graft.queries.Aggs.queries ++
       graft.queries.Wins.queries ++
@@ -24,7 +26,9 @@ object SparkEntry {
       graft.queries.SideEffects.queries ++
       graft.queries.Llm.queries ++
       graft.queries.Graph.queries ++
-      graft.streaming.Streams.queries
+      graft.streaming.Streams.queries).map { case (k, f) =>
+      k -> ((s: SparkSession, d: String) => { graft.functions.Kernels.ensure(s); f(s, d) })
+    }
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get the driver's rows-only check.

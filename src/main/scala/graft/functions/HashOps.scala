@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
@@ -174,8 +173,8 @@ object HashOps {
     new GenericArrayData(arr)
   }
 
-  /** Expression builders (arity/foldability checks), shared by the
-    * temp-function and extensions registration paths. */
+  /** Expression builders (arity/foldability checks), the hash entries of
+    * [[Kernels]]. */
   def md5BitsExpr(children: Seq[Expression]): Md5Bits = {
     require(children.size == 3,
       s"md5_bits requires exactly 3 arguments, got ${children.size}")
@@ -199,18 +198,6 @@ object HashOps {
   def md5WordsExpr(children: Seq[Expression]): Md5Words = {
     require(children.size == 1, s"md5_words requires exactly 1 argument, got ${children.size}")
     Md5Words(children.head)
-  }
-
-  /** Register the three functions on the session. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_bits", md5BitsExpr _, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mh8_md5", mh8Expr _, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_cuts", cdcCutsExpr _, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_words", md5WordsExpr _, "built-in")
   }
 }
 

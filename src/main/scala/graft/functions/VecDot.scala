@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -84,18 +83,12 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 }
 
 object VecDot {
-  /** Expression builder with an arity check, shared by the temp-function
-    * and extensions registration paths — a wrong-arity SQL call gets a
-    * clean message instead of an IndexOutOfBoundsException. */
+  /** Expression builder with an arity check, the `vec_dot` entry of
+    * [[Kernels]] — a wrong-arity SQL call gets a clean message instead of
+    * an IndexOutOfBoundsException. */
   def builder(children: Seq[Expression]): VecDot = {
     require(children.size == 2,
       s"vec_dot requires exactly 2 arguments, got ${children.size}")
     VecDot(children.head, children(1))
   }
-
-  /** Register `vec_dot` on the session so it is usable via
-    * `functions.call_function("vec_dot", a, b)` / SQL. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", builder _, "built-in")
 }

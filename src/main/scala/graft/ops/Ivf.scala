@@ -64,7 +64,7 @@ object Ivf {
     * (cell, centroid, cnorm). Shared by the seeded one-step tables and
     * [[lloyd]]'s per-round recompute. */
   def centroidsOf(rows: DataFrame, vecCol: String = "embedding"): DataFrame = {
-    graft.functions.VecDot.register(rows.sparkSession)
+    graft.functions.Kernels.ensure(rows.sparkSession)
     rows
       .select(col("cell"), posexplode(col(vecCol)).as(Seq("i", "x")))
       .groupBy("cell", "i")
@@ -101,7 +101,7 @@ object Ivf {
     * pruned assignment costs ~2·n·√(sprobe·nlist). */
   def coarseRanked(vectors: DataFrame, nlist: Int): DataFrame = {
     require(nlist >= 1)
-    graft.functions.VecDot.register(vectors.sparkSession)
+    graft.functions.Kernels.ensure(vectors.sparkSession)
     val seeded = vectors.withColumn("seed",
       pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10).cast("long"),
         lit(nlist.toLong)))
@@ -145,7 +145,7 @@ object Ivf {
     * centroids per vector. */
   def coarseRankedTwoLevel(vectors: DataFrame, nlist: Int, sprobe: Int = 4): DataFrame = {
     require(nlist >= 1 && sprobe >= 1)
-    graft.functions.VecDot.register(vectors.sparkSession)
+    graft.functions.Kernels.ensure(vectors.sparkSession)
     val nsuper = superNlist(nlist, sprobe)
     val cent = centroidTable(vectors, nlist, "vec_id", "embedding")
       .localCheckpoint(true)
@@ -202,7 +202,7 @@ object Ivf {
     * like the graph keys. */
   def lloyd(vectors: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    graft.functions.VecDot.register(vectors.sparkSession)
+    graft.functions.Kernels.ensure(vectors.sparkSession)
     val seeded = vectors
       .withColumn("cell",
         pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10).cast("long"),

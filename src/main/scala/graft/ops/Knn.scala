@@ -167,7 +167,7 @@ object Knn {
                                    k: Int): Dataset[Edge] = {
     val s = queries.sparkSession
     import s.implicits._
-    graft.functions.VecDot.register(s)
+    graft.functions.Kernels.ensure(s)
     def normed(df: DataFrame) = df.select(col("vec_id"), col("embedding"), col("label"),
       sqrt(call_function("vec_dot", col("embedding"), col("embedding"))).as("norm"))
     val a = normed(queries).select(col("vec_id").as("q_id"), col("embedding").as("a_e"),

@@ -42,7 +42,7 @@ object SimHash {
     // (r12: codegen md5_bits — identical values to the conv(substring(md5))
     // chains, DigestSpec — at 4 digests/token instead of 4 full
     // md5-hex/substring/parse expression chains)
-    graft.functions.HashOps.register(docs.sparkSession)
+    graft.functions.Kernels.ensure(docs.sparkSession)
     val chunks = tok.select(col("doc_id") +: (0 until 4).map(k =>
       call_function("md5_bits", col("token"), lit(1 + 4 * k), lit(4)).as(s"tv$k")): _*)
     val aggs = (0 until 64).map { j =>

@@ -442,7 +442,6 @@ object Aggs {
     // sorted list, so no float summation anywhere. B multiplies map
     // work ×32 but the shuffle carries types×32 rows.
     "agg_bootstrap_ci" -> ((s, d) => {
-      graft.functions.HashOps.register(s)
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val thresholds = Seq(1580030168L, 3160060337L, 3950075421L,
         4213413783L, 4279248373L, 4292415291L, 4294609777L, 4294923276L)

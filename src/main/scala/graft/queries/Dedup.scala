@@ -38,7 +38,6 @@ object Dedup {
     // 8 builtin md5(concat(...)) chains — identical hex strings (HashOps
     // doc + DigestSpec), ~8× fewer digest allocations on the dedup
     // family's dominant per-token stage.
-    graft.functions.HashOps.register(tok.sparkSession)
     val mhCols = (0 until 8).map(i =>
       min(element_at(col("__mh8"), i + 1)).as(s"mh$i"))
     val mh = tok.withColumn("__mh8", call_function("mh8_md5", col("token")))
@@ -92,7 +91,6 @@ object Dedup {
   private[graft] def ophSlots(tok: DataFrame): DataFrame = {
     // r12: codegen md5_bits replaces the conv(substring(md5)) chain —
     // identical value (HashOps doc), no hex-string/parse churn per token.
-    graft.functions.HashOps.register(tok.sparkSession)
     val hv = call_function("md5_bits", col("token"), lit(1), lit(15))
     val binned = tok.select(col("doc_id"), hv.as("hv"))
       .withColumn("bin", col("hv") % 8)
@@ -312,7 +310,6 @@ object Dedup {
     // there — it makes the intent explicit and protects consumers whose
     // shape stops qualifying for the rule.)
     val tok = tokens(docs)
-    graft.functions.MaskOps.register(s)
     val (masks, interExpr, cardExpr) = tokenMasks(tok)
     val dfreq = tok.groupBy("token").agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy("doc_id")
@@ -552,7 +549,6 @@ object Dedup {
       batch: DataFrame, threshold: Double, gate: Long,
       storedBands: Option[DataFrame] = None,
       eager: Boolean = false): (DataFrame, DataFrame) = {
-    graft.functions.MaskOps.register(s)
     val nCorpus = corpus.count()
     // Same staging trade as [[lshVerified]]'s eager route: the batch band
     // table feeds two join branches and the mask table two verify sides —
@@ -604,7 +600,6 @@ object Dedup {
   def lshVerified(s: org.apache.spark.sql.SparkSession, docs: DataFrame,
                   threshold: Double, presentationSort: Boolean = true,
                   eager: Boolean = true): DataFrame = {
-    graft.functions.MaskOps.register(s)
     val tok = tokens(docs)
     val bands0 = bandKeys(tok)
     val bands = if (eager) bands0.localCheckpoint(true) else bands0

@@ -58,8 +58,9 @@ object Geo {
   // r13 (guide §4): every synthesized coordinate hashes through the
   // codegen md5_bits kernel instead of the interpreted
   // conv(substring(md5(...))) chain — identical values (DigestSpec pins
-  // the chain equality), no per-row hex-string/parse churn. Resolved via
-  // the GraftExtensions registry (every bench/verify/test session).
+  // the chain equality), no per-row hex-string/parse churn. Resolved from
+  // the Kernels catalogue, which the extension injects and
+  // SparkEntry.queries installs on a session built without it.
   private def coord(tag: String, key: Column): Column =
     pmod(call_function("md5_bits",
       concat(lit(tag), key.cast("string")), lit(1), lit(12)), lit(Side))

@@ -56,7 +56,6 @@ object Llm {
     // hex-substring + conv — identical cut positions by construction
     // (HashOps doc: value%32 depends only on hex chars 14–15; DigestSpec
     // pins the chain equality).
-    graft.functions.HashOps.register(docsRaw.sparkSession)
     val docs = docsRaw.select(col("doc_id"), col("text"), length(col("text")).as("len"))
     val cuts = docs.select(col("doc_id"),
       explode(call_function("cdc_cuts", col("text"))).as("s"))
@@ -163,7 +162,6 @@ object Llm {
     // 2 Exchanges to 1. tv comes from the codegen md5_bits (identical
     // value to the conv(substring(md5)) chain, DigestSpec). Each sgn_j
     // sum and the Σ 2^j readout are the same exact integers as before.
-    graft.functions.HashOps.register(s)
     val votes = (0 until 16).map(j =>
       sum(expr(s"CASE WHEN ((tv >> $j) & 1) = 1 THEN 1 ELSE -1 END")).as(s"sgn$j"))
     tokensDistinct(s, d)
@@ -217,7 +215,6 @@ object Llm {
 
   /** Embeddings with a precomputed L2 norm (computed once, not per pair). */
   private def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VecDot.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"), l2norm(col("embedding")).as("norm"))
   }
@@ -1910,7 +1907,6 @@ object Llm {
     "llm_hash_embed" -> ((s, d) => {
       // r12: codegen md5_bits (identical values, DigestSpec) for the two
       // per-token digest-window extractions
-      graft.functions.HashOps.register(s)
       tokensAll(s, d)
         .select(col("doc_id"),
           (call_function("md5_bits", col("token"), lit(1), lit(8)) % 16).as("dim"),
@@ -1947,7 +1943,6 @@ object Llm {
       // values (DigestSpec pins the chain equality), identical fold order
       // (the token-order HOF aggregate stays, only its per-token hash term
       // is swapped), so every dsir_w is bit-unchanged.
-      graft.functions.HashOps.register(s)
       val bucketOf: Column => Column = t =>
         (call_function("md5_bits", t, lit(1), lit(8)) % 16)
       val bc = tokensAll(s, d)
@@ -2601,7 +2596,6 @@ object Llm {
       // the identical integers (mask bits are the per-doc distinct token
       // dictionary ids), so jacq and every output row are unchanged —
       // oracle re-verified hash-green, oracle SQL untouched.
-      graft.functions.MaskOps.register(s)
       val (masks, interExpr, cardExpr) = Dedup.tokenMasks(tok)
       val ma = masks.select(col("doc_id").as("ma_id"), col("mask").as("a_mask"))
       val mb = masks.select(col("doc_id").as("mb_id"), col("mask").as("b_mask"))
@@ -2740,7 +2734,6 @@ object Llm {
     // 64-component vector rides as one broadcast row; the only heavy
     // stage is pca's covariance scan, shared.
     "llm_embed_whiten" -> ((s, d) => {
-      graft.functions.VecDot.register(s)
       val v = pcaPc1(s, d)
       import s.implicits._
       val pcDf = broadcast(Seq(Tuple1(v.toSeq)).toDF("pc"))

@@ -291,7 +291,6 @@ object Wins {
       // (SeriesOpsSpec pins kernel == the stacked-projection
       // formulation), same 16-sample warm-up filter (size(l) = 16 ⟺ the
       // old lag-15 notNull), same IEEE warp_gain readout.
-      graft.functions.SeriesOps.register(s)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-15, 0)
       Tables.events(s, d)
@@ -353,7 +352,6 @@ object Wins {
       // identical IEEE op sequence to the HOF aggregate (SeriesOpsSpec),
       // the floor-1e-4 edge stays in SQL so its long-cast semantics are
       // untouched.
-      graft.functions.SeriesOps.register(s)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-15, 0)
       Tables.events(s, d)
@@ -432,7 +430,6 @@ object Wins {
     "win_holt" -> ((s, d) => {
       // r12 (guide §4): codegen holt_fold kernel — identical IEEE op
       // sequence to the HOF aggregate (SeriesOpsSpec), floor edge in SQL.
-      graft.functions.SeriesOps.register(s)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-15, 0)
       Tables.events(s, d)
@@ -457,7 +454,6 @@ object Wins {
     // IEEE divides of exact ints. First row per entity (empty history)
     // is excluded on both engines (empty frame ⇒ size 0 / NULL list).
     "win_forecast_eval" -> ((s, d) => {
-      graft.functions.SeriesOps.register(s)
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-16, -1)
@@ -505,7 +501,6 @@ object Wins {
       // structs — the exp() is Math.exp on both routes and the decay is
       // computed once per step (the duplicated SQL sub-expression equals
       // the same value); SeriesOpsSpec pins equality, floor edge in SQL.
-      graft.functions.SeriesOps.register(s)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-15, 0)
       Tables.events(s, d)
@@ -588,7 +583,6 @@ object Wins {
       // even/odd median and floor-1e-4; SeriesOpsSpec pins the kernel
       // against the old HOF formulation on adversarial and random series,
       // and the oracle re-verified hash-green at sf0.001/0.01/0.1).
-      graft.functions.SeriesOps.register(s)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-15, 0)
       Tables.events(s, d)
@@ -615,7 +609,6 @@ object Wins {
       // sequence (gain computed once per step, as the duplicated SQL
       // sub-expression evaluates to the same value; SeriesOpsSpec pins
       // equality), floor edge in SQL.
-      graft.functions.SeriesOps.register(s)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-15, 0)
       Tables.events(s, d)
@@ -648,7 +641,6 @@ object Wins {
       // IEEE op order per step (SeriesOpsSpec pins kernel == the
       // ops.HoltWinters generated expression, which remains the
       // reference formulation); floor edge in SQL.
-      graft.functions.SeriesOps.register(s)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-15, 0)
       Tables.events(s, d)
@@ -670,7 +662,6 @@ object Wins {
       // r12: same hw_fold kernel, first-full-season seeding (the
       // short-history fallback lives inside the kernel exactly like the
       // generated expression's IF).
-      graft.functions.SeriesOps.register(s)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(-15, 0)
       Tables.events(s, d)
@@ -745,7 +736,6 @@ object Wins {
     // sqrt of the same raw accumulator). One user-keyed shuffle +
     // in-partition sort; the fold is O(16) per row.
     "win_ewm_var" -> ((s, d) => {
-      graft.functions.SeriesOps.register(s)
       val wl = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val wf = wl.rowsBetween(-15, 0)
       Tables.events(s, d)

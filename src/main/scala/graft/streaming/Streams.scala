@@ -106,12 +106,16 @@ object Streams {
     // dir-shaped symlink, which made every derived-corpus stream drain
     // ZERO rows (caught by the r7 stream_kalman scale probe — the r7
     // SCALE_full streaming rows carried the same vacuous ~0.17 s).
+    // A symlink target is resolved against the link's directory, not the
+    // cwd: link the absolute path, and key the staging dir on it, or a
+    // relative data dir leaves a dangling link and the stream drains 0 rows.
     import java.nio.file.{Files, Paths}
+    val base = Paths.get(d).toAbsolutePath.normalize
+    val src = base.resolve("events.parquet")
     val dir = Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_stream_src",
-      Integer.toHexString(d.hashCode))
+      Integer.toHexString(base.toString.hashCode))
     if (!Files.exists(dir.resolve("_staged"))) stageAtomically(dir) { tmp =>
-      val src = Paths.get(s"$d/events.parquet")
       if (Files.isDirectory(src)) {
         val parts = listFiles(src, _.getFileName.toString.endsWith(".parquet"))
         parts.zipWithIndex.foreach { case (p, i) =>

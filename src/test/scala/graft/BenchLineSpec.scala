@@ -25,4 +25,19 @@ class BenchLineSpec extends AnyFunSuite {
     assert(line.contains("\"value\":85"))
     assert(line.contains("_others_45"))
   }
+
+  test("writeFull lists the keys that threw under _failed, once each, sorted") {
+    val path = java.nio.file.Files.createTempFile("bench_full", ".json")
+    try {
+      Bench.writeFull(Seq("b" -> 1.0, "a" -> 0.5, "c" -> 0.25), Seq("c", "a", "c"),
+        "/data/sf0.1", path.toString)
+      val json = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+      assert(json.contains(""""_failed": ["a", "c"],"""), json)
+      assert(json.contains(""""_keys": 3,"""), json)
+      assert(json.contains(""""_total_sec": 1.750,"""), json)
+      Bench.writeFull(Seq("a" -> 0.5), Nil, "/data/sf0.1", path.toString)
+      val clean = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+      assert(clean.contains(""""_failed": [],"""), clean)
+    } finally java.nio.file.Files.deleteIfExists(path)
+  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r12 codegen hash expressions (graft.functions.HashOps)
@@ -12,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Uses the shared SparkSpec session: a getOrCreate() in a suite aliases
   * whatever session an earlier suite created, so stopping it here would
   * kill the SparkContext for every remaining suite (r12 driver failure). */
-class DigestSpec extends SparkSpec with BeforeAndAfterAll {
-
-  override def beforeAll(): Unit = {
-    graft.functions.HashOps.register(spark) // idempotent re-registration
-  }
+class DigestSpec extends SparkSpec {
 
   /** Adversarial strings: empty, single char, ASCII, multi-byte UTF-8
     * (2/3/4-byte sequences incl. an emoji supplementary pair), boundary

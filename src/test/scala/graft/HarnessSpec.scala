@@ -85,10 +85,24 @@ class HarnessSpec extends SparkSpec {
     // co-located in >= 2 distinct hours (the geo_radius_pairs zero-answer
     // stance — the oracle agrees on empty, which IS the correct result)
     val skipEmpty = Set("join_anti", "set_except", "llm_dedup_near", "geo_comovement")
+    // each key on its own session with no kernel registered: the route
+    // alone must install what it calls (as without spark.sql.extensions)
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf0001).count()
+      val n = fn(SparkSpec.strippedSession(), sf0001).count()
       if (!skipEmpty.contains(name))
         assert(n > 0, s"$name returned no rows")
     }
+  }
+
+  test("custom functions are registered only from the Kernels catalogue") {
+    val root = java.nio.file.Paths.get("src/main")
+    val calls = "createOrReplaceTempFunction|registerFunction|injectFunction".r
+    val st = java.nio.file.Files.walk(root)
+    val offenders = try st.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => calls.findFirstIn(new String(java.nio.file.Files.readAllBytes(p))).nonEmpty)
+      .map(_.getFileName.toString).toSet
+    finally st.close()
+    assert(offenders == Set("Kernels.scala", "GraftExtensions.scala"), offenders)
   }
 }

@@ -23,7 +23,6 @@ class IvfSpec extends SparkSpec {
   /** n deterministic pseudo-random 8-dim vectors (md5-derived uniforms in
     * [-0.5, 0.5]) with precomputed norms — near-uniform cell occupancy. */
   private def corpus(n: Long): DataFrame = {
-    graft.functions.VecDot.register(spark)
     spark.range(n).select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(7)), j =>
           (conv(substring(md5(concat(col("id").cast("string"), lit(":"), j.cast("string"))),

@@ -11,7 +11,6 @@ import graft.ops.Knn
 class KnnSpec extends SparkSpec {
 
   test("blocked-scan top-5 equals the declarative window top-5 on sf0.001") {
-    graft.functions.VecDot.register(spark)
     val v = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding"), col("label"),
         sqrt(call_function("vec_dot", col("embedding"), col("embedding"))).as("norm"))

@@ -453,7 +453,6 @@ class MiscOpsSpec extends SparkSpec {
     // 12k synthetic vectors (> HardNegGate) staged as an embeddings table
     // so the query runs its production IVF branch end-to-end
     val dir = java.nio.file.Files.createTempDirectory("graft_hardneg").toString
-    graft.functions.VecDot.register(spark)
     spark.range(12000).select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(7)), j =>
           (conv(substring(md5(concat(col("id").cast("string"), lit(":"), j.cast("string"))),

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SeriesOpsSpec extends SparkSpec with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
-    graft.functions.SeriesOps.register(spark) // idempotent re-registration
+    graft.functions.SeriesOps.register(spark) // forwards to Kernels.ensure: a no-op here
   }
 
   /** The exact pre-r12 win_theil_sen HOF formulation over column `l`. */
@@ -227,5 +227,12 @@ class SeriesOpsSpec extends SparkSpec with BeforeAndAfterAll {
       .where(col("dtw") =!= col("dtw_ref") || col("l1") =!= col("l1_ref"))
       .count() === 0)
     assert(newOut.count() > 1500) // non-vacuous: warm rows dominate
+  }
+
+  test("theil_sen_med is NULL when any slot is NULL") {
+    // a deliberate total-function choice, not the HOF chain's answer (it
+    // sorts the null slopes and can still pick a non-null median)
+    val r = spark.sql("SELECT theil_sen_med(array(1.0D, NULL, 3.0D))").head()
+    assert(r.isNullAt(0))
   }
 }

@@ -26,4 +26,15 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A fresh child of the shared session with every
+    * [[graft.functions.Kernels]] entry dropped from its registry: what a
+    * session built without `spark.sql.extensions` resolves. */
+  def strippedSession(): SparkSession = {
+    val child = session.newSession()
+    graft.functions.Kernels.all.foreach { case (id, _, _) =>
+      child.sessionState.functionRegistry.dropFunction(id)
+    }
+    child
+  }
 }

@@ -381,6 +381,17 @@ class StreamingSpec extends SparkSpec {
     assert(stream == batch)
   }
 
+  test("stream_tumbling on a cwd-relative data dir drains the same rows as on the absolute one") {
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val relative = cwd.relativize(java.nio.file.Paths.get(sf0001)).toString
+    assert(!java.nio.file.Paths.get(relative).isAbsolute)
+    def rows(d: String) = graft.streaming.Streams.queries("stream_tumbling")(spark, d)
+      .collect().map(_.toSeq).toSet
+    val absolute = rows(sf0001)
+    assert(absolute.nonEmpty)
+    assert(rows(relative) == absolute)
+  }
+
   test("stream_topk keeps at most 3 types per window, rank-consistent with batch counts") {
     val rows = graft.streaming.Streams.queries("stream_topk")(spark, sf0001).collect()
     val perBucket = rows.groupBy(_.get(0))
