@@ -1,33 +1,30 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
 
-/** Deterministic reclamation of `localCheckpoint` storage.
+/** The one staging path, and deterministic reclamation of what it stages.
   *
-  * `df.localCheckpoint(true)` persists the materialized RDD in the block
-  * manager; the blocks are reclaimed only when the JVM garbage-collects the
-  * RDD reference (the ContextCleaner hook). Two shapes turn that lazy
-  * reclamation into a real leak:
+  * Every staged intermediate goes through [[stage]]: outside
+  * [[auditLazily]] that is `df.localCheckpoint(true)`, inside it the plan
+  * stays lazy, so the plan audits read each key's own registry route.
+  * HarnessSpec pins, with a source scan, that no other file under
+  * `src/main` calls `localCheckpoint`.
   *
-  *  - iterative algorithms that checkpoint per round (connected-components
-  *    label propagation) — dozens of dead label tables pin storage memory
-  *    for the whole loop;
-  *  - long sequential runs of many queries in one JVM (the driver's bench
-  *    shape, or any ETL daemon) — blocks from query N tax queries N+1…
-  *    with GC pressure and cache eviction until a full GC happens to run.
-  *
-  * Round-3's driver bench measured the damage: every dedup-family query
-  * scheduled after the clustering keys paid 4.8–9.7× in GC/eviction. At
-  * 100 TB the same pattern kills executors on storage memory outright, so
-  * freeing superseded checkpoints is a scale requirement.
+  * A local checkpoint's blocks are reclaimed only when the JVM
+  * garbage-collects the RDD (the ContextCleaner hook). Per-round stages in
+  * iterative loops, and long many-query runs (the bench, any ETL daemon),
+  * turn that into a leak: round 3's bench measured 4.8–9.7× GC/eviction on
+  * every dedup query scheduled after the clustering keys, and at 100 TB it
+  * kills executors on storage memory. So superseded stages are freed
+  * explicitly.
   *
   * The checkpointed RDD sits behind the `LogicalRDD` leaf of the returned
-  * DataFrame's analyzed plan (it survives `.drop`/`.select` wrappers);
-  * non-blocking removal keeps callers off the block-manager round-trip.
-  * Only call this once nothing will read the checkpoint again — downstream
-  * plans hold the RDD by reference, and a freed block set recomputes from
-  * an EMPTY lineage (localCheckpoint truncates it), so a premature free is
-  * an error, not a slowdown.
+  * frame's analyzed plan (it survives `.drop`/`.select` wrappers); removal
+  * is non-blocking. Free only once nothing reads the stage again:
+  * downstream plans hold the RDD by reference, and a freed block set
+  * recomputes from an EMPTY lineage, so a premature free is an error, not
+  * a slowdown.
   */
 object Checkpoints {
   /** Frees the checkpoint behind `df`, which must have EXACTLY ONE
@@ -68,6 +65,16 @@ object Checkpoints {
     * [[auditLazily]] it returns `df` unexecuted instead. */
   def stage(df: DataFrame): DataFrame =
     if (auditing) df else df.localCheckpoint(true)
+
+  /** Row count under which [[broadcastGate]] broadcasts a table. */
+  val BroadcastNodes = 5000000L
+
+  /** `broadcast(df)` when the table's measured row count is under
+    * [[BroadcastNodes]], else `df`. A staged frame has no statistics (the
+    * planner sizes it as huge), so without the hint every join against a
+    * staged node table would shuffle the edge-sized side. */
+  def broadcastGate(rows: Long): DataFrame => DataFrame =
+    df => if (rows < BroadcastNodes) broadcast(df) else df
 
   /** Runs `body` with staging turned into plan composition: [[stage]]
     * returns its input lazily, [[free]]/[[freeAll]] do nothing, and

@@ -148,7 +148,7 @@ object Ivf {
     graft.functions.Kernels.ensure(vectors.sparkSession)
     val nsuper = superNlist(nlist, sprobe)
     val cent = centroidTable(vectors, nlist, "vec_id", "embedding")
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     val scent = centroidTable(cent, nsuper, "cell", "centroid")
       .select(col("cell").as("scell"), col("centroid").as("scentroid"),
         col("cnorm").as("snorm"))
@@ -208,7 +208,7 @@ object Ivf {
         pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10).cast("long"),
           lit(k.toLong)))
       .select(col("vec_id"), col("embedding"), col("norm"), col("cell"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     val asg = Iterate.rounds(seeded, rounds) { (asg, _) =>
       val cent = centroidsOf(asg)
       val wA = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))

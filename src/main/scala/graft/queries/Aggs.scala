@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -270,7 +271,7 @@ object Aggs {
         .agg(sum("vq").as("vq"), sum("n").as("n"))
         .groupBy(col("user_id"), Granularity.Day.bucket(col("bh")).as("bd"))
         .agg(sum("vq").as("vq"), sum("n").as("n"))
-        .localCheckpoint(true) // user×day grain, read by BOTH calendar legs
+        .transform(Checkpoints.stage) // user×day grain, read by BOTH calendar legs
       def leg(g: Granularity) = daily
         .groupBy(col("user_id"), g.bucket(col("bd")).as("bucket"))
         .agg(sum("vq").as("value_microunits"), sum("n").as("n_samples"))
@@ -1726,7 +1727,7 @@ object Aggs {
         .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
         .select(col("c_mktsegment").as("seg"), col("r_name").as("region"))
       val joint = cust.groupBy("seg", "region").agg(count(lit(1)).as("nxy"))
-        .localCheckpoint(true) // cell grain: ≤ |segs|·|regions| rows
+        .transform(Checkpoints.stage) // cell grain: ≤ |segs|·|regions| rows
       val margx = joint.groupBy("seg").agg(sum("nxy").as("nx"))
       val margy = joint.groupBy("region").agg(sum("nxy").as("ny"))
       val tot = joint.agg(sum("nxy").as("n"))
@@ -1819,7 +1820,7 @@ object Aggs {
         .where(col("nxt").isNotNull)
         .groupBy(col("event_type").as("src"), col("nxt").as("dst"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(true) // state² grain
+        .transform(Checkpoints.stage) // state² grain
       val p = trans
         .join(broadcast(trans.groupBy("src").agg(sum("c").as("t"))), "src")
         .select(col("src"), col("dst"),
@@ -1971,7 +1972,7 @@ object Aggs {
           when(col("ed") * 2 <= col("d0") + col("d1"), lit("A")).otherwise(lit("B")))
         .groupBy("event_type", "period")
         .agg(count(lit(1)).as("c"), sum("cents").as("sc"))
-        .localCheckpoint(true) // segment × period grain
+        .transform(Checkpoints.stage) // segment × period grain
       val tots = cells.groupBy("period").agg(sum("c").as("n"))
       val wide = cells.join(broadcast(tots), "period")
         .select(col("event_type"), col("period"),
@@ -2046,7 +2047,7 @@ object Aggs {
           when(col("ed") * 2 <= col("d0") + col("d1"), lit(0L)).otherwise(lit(1L)))
         .groupBy("arm", "period")
         .agg(count(lit(1)).as("n"), sum("vq").as("sv"))
-        .localCheckpoint(true) // 4 cells
+        .transform(Checkpoints.stage) // 4 cells
       def cell(a: Int, p: Int) = cells.where(col("arm") === a && col("period") === p)
         .select((col("sv").cast("double") / col("n").cast("double") / 1e6).as(s"m$a$p"),
           col("n").as(s"n$a$p"))
@@ -2187,7 +2188,7 @@ object Aggs {
         .withColumn("arm",
           call_function("md5_bits",
             col("user_id").cast("string"), lit(1), lit(8)) % 2)
-        .localCheckpoint(true) // user grain; read by pooled + per-arm folds
+        .transform(Checkpoints.stage) // user grain; read by pooled + per-arm folds
       def ofold(v: String) = expr(
         s"aggregate(array_sort(collect_list(named_struct('u', user_id, 'x', $v))), " +
           "CAST(0.0 AS DOUBLE), (acc, e) -> acc + e.x)")

@@ -332,7 +332,7 @@ object Dedup {
       .select(col("doc_id"), col("lang"), col("token"), col("rn"), col("ntok"))
       // the self-join references this subtree twice; stage it once
       // (explode → dfreq join → window is the expensive prefix build)
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     val a = prefix.select(col("doc_id").as("a_id"), col("lang"), col("token"),
       col("rn").as("a_rn"), col("ntok").as("a_n"))
     val b = prefix.select(col("doc_id").as("b_id"), col("lang").as("b_lang"),
@@ -383,13 +383,13 @@ object Dedup {
     // the mirror is then a narrow op over in-memory partitions. Measured
     // on the lshVerified-fed clusters key: 14.1 s → ~8.5 s at sf0.1.
     val p = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     val edges = p
       .unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     Checkpoints.free(p) // edges materialized; the projection is dead weight
     val nodes = edges.select(col("src").as("id")).distinct()
-    val labels0 = nodes.withColumn("cluster_id", col("id")).localCheckpoint(true)
+    val labels0 = Checkpoints.stage(nodes.withColumn("cluster_id", col("id")))
     // Size gate, measured once: below ~5M nodes the label table is a few
     // tens of MB — broadcast it and the per-round edge join plus the label
     // update run map-side (one shuffle per round instead of three). Above
@@ -397,9 +397,7 @@ object Dedup {
     // impossible, so fall back to plain shuffle joins; the checkpointed
     // plans lack stats, which is why the planner can't make this call
     // itself.
-    val nNodes = labels0.count()
-    def maybeBc(df: DataFrame): DataFrame =
-      if (nNodes < 5000000L) broadcast(df) else df
+    val maybeBc = Checkpoints.broadcastGate(labels0.count())
     val labels = Iterate.untilFixpoint(labels0, 50) { (cur, _) =>
       val labels = cur.drop("chg")
       val neighborMin = edges
@@ -431,42 +429,6 @@ object Dedup {
     labels.drop("chg")
   }
 
-  /** The production dedup pipeline: MinHash+LSH banding generates
-    * candidate pairs sub-quadratically (equi-join on band keys, no
-    * forced broadcasts — every join here lets the planner choose), then
-    * each candidate is verified with EXACT Jaccard via the bitmasks.
-    *
-    * Semantics: deliberately NOT language-blocked, unlike
-    * [[jaccardBitmask]] — LSH dedup is content-driven, so near-identical
-    * documents in different declared languages ARE reported.
-    *
-    * Recall follows the banding S-curve P(candidate) = 1-(1-J^4)^2:
-    * ≈50% at J≈0.74, ≈75% at J≈0.84, >99% at J≥0.95 — tuned for
-    * near-identical dup detection. Precision is exact by construction.
-    *
-    * The band/mask tables feed self-joins (two reads each), so lazily
-    * they re-execute per branch. Under honest FOREACH timing this
-    * recompute costs 3× the whole query (18–23 s vs 5.6–6.9 s at sf0.1,
-    * NOTES.md round 7) — the earlier "recompute beats checkpoint"
-    * call was a count()-timing artifact (Catalyst pruned the re-executed
-    * branches out of the counted plan, the r7 win_interpolate lesson). So
-    * `eager = true` (the default) checkpoints the band and mask tables
-    * and returns the verify plan LAZY over those blocks. The result
-    * itself is deliberately NOT checkpointed — it is pair-volume-sized
-    * (5 M rows at sf0.1) and consumed exactly once, so materializing it
-    * into the block manager was measured to give the whole recompute win
-    * back. The two staged blocks are DOC-sized (bands = 2 rows/doc,
-    * masks = 1 row/doc — not pair-sized, not loop-accumulated): consumers
-    * with a natural end-of-life hook free them explicitly
-    * (`Checkpoints.freeAll(pairs)` after the clustering keys copy the
-    * pairs into their own edge checkpoint); otherwise the ContextCleaner
-    * reclaims them at the next GC once the caller drops the frame — the
-    * bounded case the Checkpoints doc distinguishes from the per-round
-    * leak class. `eager = false` keeps the fully lazy composition for
-    * plan audits (PlanScan/PlanShapeSpec inspect exchange counts and
-    * window placement without executing) and for single-consumption
-    * callers too small to stage (the streaming first batch).
-    */
   /** Incremental (batch-vs-corpus) LSH dedup — the daily-ingest shape: a
     * new batch of documents is checked against the existing corpus AND
     * against itself, without ever re-pairing the corpus with the corpus.
@@ -491,7 +453,7 @@ object Dedup {
   def lshVerifiedIncremental(s: org.apache.spark.sql.SparkSession,
                              corpus: DataFrame, batch: DataFrame,
                              threshold: Double): DataFrame =
-    lshVerifiedIncrementalGated(s, corpus, batch, threshold, BroadcastDocs)
+    lshVerifiedIncrementalWithBands(s, corpus, batch, threshold, BroadcastDocs)._1
 
   /** The stored band index (doc_id, band_i, band_v) for `docs` — the
     * artifact an ingest pipeline writes once per corpus version and every
@@ -527,40 +489,31 @@ object Dedup {
   def lshVerifiedIncremental(s: org.apache.spark.sql.SparkSession,
                              corpus: DataFrame, corpusBands: DataFrame,
                              batch: DataFrame, threshold: Double): DataFrame =
-    lshVerifiedIncrementalGated(s, corpus, batch, threshold, BroadcastDocs,
-      Some(corpusBands))
+    lshVerifiedIncrementalWithBands(s, corpus, batch, threshold, BroadcastDocs,
+      Some(corpusBands))._1
 
-  private[graft] def lshVerifiedIncrementalGated(
-      s: org.apache.spark.sql.SparkSession, corpus: DataFrame,
-      batch: DataFrame, threshold: Double, gate: Long,
-      storedBands: Option[DataFrame] = None,
-      eager: Boolean = false): DataFrame =
-    lshVerifiedIncrementalWithBands(s, corpus, batch, threshold, gate,
-      storedBands, eager)._1
-
-  /** [[lshVerifiedIncrementalGated]] plus the batch's own (staged) band
-    * table — for the streaming ingest loop, which must append exactly
-    * those bands to the stored index after probing: returning them saves
-    * a second tokens→minhash→banding pass per micro-batch (r8, r7
-    * VERDICT #5). Caller frees the checkpoints only after BOTH the pair
-    * write and the index append have consumed them. */
+  /** The incremental pairs plus the batch's own band table — for the
+    * streaming ingest loop, which must append exactly those bands to the
+    * stored index after probing: returning them saves a second
+    * tokens→minhash→banding pass per micro-batch (r8, r7 VERDICT #5). The
+    * batch tables are staged iff `storedBands` is given; the caller frees
+    * them only after BOTH the pair write and the index append ran. */
   private[graft] def lshVerifiedIncrementalWithBands(
       s: org.apache.spark.sql.SparkSession, corpus: DataFrame,
       batch: DataFrame, threshold: Double, gate: Long,
-      storedBands: Option[DataFrame] = None,
-      eager: Boolean = false): (DataFrame, DataFrame) = {
+      storedBands: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val nCorpus = corpus.count()
-    // Same staging trade as [[lshVerified]]'s eager route: the batch band
-    // table feeds two join branches and the mask table two verify sides —
-    // checkpoint them (doc-sized blocks; the per-batch caller frees them
-    // once the result is consumed) and re-gate the broadcast hints the
-    // stats-less LogicalRDDs would otherwise lose. eager=false keeps the
-    // fully lazy composition (the batch registry key's auditable plan).
-    val smallCorpus = eager && nCorpus < BroadcastDocs
+    // Same staging trade as [[lshVerified]]'s staged route: with a stored
+    // index (the per-batch streaming probe) stage the batch bands (two join
+    // branches) and masks (two verify sides), doc-sized blocks, and re-gate
+    // the broadcast hints their stats-less LogicalRDDs lose; without one
+    // (the batch registry key) the composition stays lazy.
+    val staged = storedBands.isDefined
+    val smallCorpus = staged && nCorpus < BroadcastDocs
     def maybeBc(df: DataFrame): DataFrame = if (smallCorpus) broadcast(df) else df
     val corpusBands = storedBands.getOrElse(bandKeys(tokens(corpus)))
     val batchBands0 = bandKeys(tokens(batch))
-    val batchBands = if (eager) batchBands0.localCheckpoint(true) else batchBands0
+    val batchBands = if (staged) Checkpoints.stage(batchBands0) else batchBands0
     val l = batchBands.select(col("doc_id").as("a_id"), col("band_i"), col("band_v"))
     val rc = corpusBands.select(col("doc_id").as("b_id"),
       col("band_i").as("bi2"), col("band_v").as("bv2"))
@@ -584,7 +537,7 @@ object Dedup {
     // cost the stored band index exists to avoid: checkpoint the (small)
     // pair list once, then every downstream stage is ∝ batch + matches.
     val scoped = nCorpus > gate
-    val candidates = if (scoped) rawCand.localCheckpoint(true) else rawCand
+    val candidates = if (scoped) Checkpoints.stage(rawCand) else rawCand
     val base = corpus.unionByName(batch)
     val docsForMasks = if (scoped) {
       val candDocs = candidates.select(col("a_id").as("doc_id"))
@@ -592,22 +545,60 @@ object Dedup {
       base.join(candDocs, Seq("doc_id"), "left_semi")
     } else base
     val (masks0, interExpr, cardExpr) = tokenMasks(tokens(docsForMasks))
-    val masks = if (eager) maybeBc(masks0.localCheckpoint(true)) else masks0
+    val masks = if (staged) maybeBc(Checkpoints.stage(masks0)) else masks0
     (verifyPairs(candidates, masks, interExpr, cardExpr, threshold,
       sorted = true, dedupAfterVerify = false), batchBands)
   }
 
+  /** The production dedup pipeline: MinHash+LSH banding generates
+    * candidate pairs sub-quadratically (equi-join on band keys, no
+    * forced broadcasts — every join here lets the planner choose), then
+    * each candidate is verified with EXACT Jaccard via the bitmasks.
+    *
+    * Semantics: deliberately NOT language-blocked, unlike
+    * [[jaccardBitmask]] — LSH dedup is content-driven, so near-identical
+    * documents in different declared languages ARE reported.
+    *
+    * Recall follows the banding S-curve P(candidate) = 1-(1-J^4)^2:
+    * ≈50% at J≈0.74, ≈75% at J≈0.84, >99% at J≥0.95 — tuned for
+    * near-identical dup detection. Precision is exact by construction.
+    *
+    * The band/mask tables feed self-joins (two reads each). When the
+    * candidates are deduped before the verify (`threshold < 0.7`, the 0.5
+    * route of `llm_dedup_lsh_verified`) both are staged through
+    * `Checkpoints.stage` and the verify plan is returned LAZY over them:
+    * lazily they re-execute per branch, which under honest FOREACH timing
+    * cost 3× the whole query (18–23 s vs 5.6–6.9 s at sf0.1, NOTES.md
+    * round 7; the earlier "recompute wins" call was a count()-timing
+    * artifact). At `threshold >= 0.7` the pair plan is consumed once (the
+    * clustering keys copy it into their own edge stage, as does the
+    * stream's first batch) and the single lazy execution benched 5.7 s vs
+    * 7.8 s staged, so nothing is staged. The pair-sized result is never
+    * staged (5 M rows at sf0.1, read once; staging it gave the recompute
+    * win back). The staged blocks are DOC-sized (bands 2 rows/doc, masks
+    * 1): callers free them with `Checkpoints.freeAll(pairs)` or leave them
+    * to the ContextCleaner — the bounded case, not the per-round leak.
+    */
   def lshVerified(s: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                  threshold: Double, presentationSort: Boolean = true,
-                  eager: Boolean = true): DataFrame = {
+                  threshold: Double, presentationSort: Boolean = true): DataFrame = {
+    // Candidate-dedup placement is survivor-rate-dependent (measured at
+    // sf0.1: 6.6 M raw collisions → 5.2 M distinct): at low thresholds
+    // nearly every candidate passes verification (5.0 M of 5.2 M at 0.5),
+    // so dedup BEFORE the verify joins — the exchange is smallest there.
+    // At high thresholds survivors are sparse (0.9 M at 0.9), so let the
+    // ≤2-per-pair duplicates ride the codegen'd bitmask verify and dedup
+    // the survivors — the 5 M-row candidate exchange disappears. The same
+    // split decides staging (see above): only the early-dedup route stages.
+    val dedupLate = threshold >= 0.7
+    val staged = !dedupLate
     val tok = tokens(docs)
     val bands0 = bandKeys(tok)
-    val bands = if (eager) bands0.localCheckpoint(true) else bands0
+    val bands = if (staged) Checkpoints.stage(bands0) else bands0
     // A checkpointed LogicalRDD carries no stats (the pagerank lesson), so
     // the planner would shuffle-join against the doc-sized band/mask
     // blocks it previously auto-broadcast. Re-gate the hint on a measured
     // count — above the gate the shuffle join is the correct plan anyway.
-    val smallCorpus = eager && docs.count() < BroadcastDocs
+    val smallCorpus = staged && docs.count() < BroadcastDocs
     def maybeBc(df: DataFrame): DataFrame = if (smallCorpus) broadcast(df) else df
     val l = bands.select(col("doc_id").as("a_id"), col("band_i"), col("band_v"))
     val r = bands.select(col("doc_id").as("b_id"), col("band_i").as("bi2"), col("band_v").as("bv2"))
@@ -615,17 +606,9 @@ object Dedup {
         col("band_i") === col("bi2") && col("band_v") === col("bv2")
           && col("a_id") < col("b_id"))
       .select("a_id", "b_id")
-    // Candidate-dedup placement is survivor-rate-dependent (measured at
-    // sf0.1: 6.6 M raw collisions → 5.2 M distinct): at low thresholds
-    // nearly every candidate passes verification (5.0 M of 5.2 M at 0.5),
-    // so dedup BEFORE the verify joins — the exchange is smallest there.
-    // At high thresholds survivors are sparse (0.9 M at 0.9), so let the
-    // ≤2-per-pair duplicates ride the codegen'd bitmask verify and dedup
-    // the survivors — the 5 M-row candidate exchange disappears.
-    val dedupLate = threshold >= 0.7
     val candidates = if (dedupLate) rawCand else rawCand.distinct()
     val (masks0, interExpr, cardExpr) = tokenMasks(tok)
-    val masks = if (eager) maybeBc(masks0.localCheckpoint(true)) else masks0
+    val masks = if (staged) maybeBc(Checkpoints.stage(masks0)) else masks0
     // presentationSort=false skips the final global sort — the right call
     // when the pairs feed clustering (which re-keys them immediately)
     verifyPairs(candidates, masks, interExpr, cardExpr, threshold,

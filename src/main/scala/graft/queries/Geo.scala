@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -398,7 +399,7 @@ object Geo {
         .where((col("x1") - col("x2")) * (col("x1") - col("x2"))
           + (col("y1") - col("y2")) * (col("y1") - col("y2")) <= lit(Cell * Cell))
         .select("s1", "s2")
-        .localCheckpoint(true) // read by degree, core-edge and attach stages
+        .transform(Checkpoints.stage) // read by degree, core-edge and attach stages
       val deg = pairs.select(col("s1").as("k")).unionByName(pairs.select(col("s2").as("k")))
         .groupBy("k").agg(count(lit(1)).as("n"))
       val cores = deg.where(col("n") >= 3).select(col("k"))
@@ -410,7 +411,7 @@ object Geo {
       val coreLbl = cores
         .join(lbl, col("k") === col("id"), "left")
         .select(col("k"), coalesce(col("cluster_id"), col("k")).as("lbl"))
-        .localCheckpoint(true) // core grain; read by core rows + attach
+        .transform(Checkpoints.stage) // core grain; read by core rows + attach
       val edges = pairs.select(col("s1").as("x"), col("s2").as("y"))
         .unionByName(pairs.select(col("s2").as("x"), col("s1").as("y")))
       val attach = edges.join(coreLbl.select(col("k").as("y"), col("lbl")), Seq("y"))

@@ -101,14 +101,8 @@ object Graph {
     * The init projection over `deg` is never freed (Iterate leaves init to
     * the caller), so `deg`'s own checkpoint survives for later rounds. */
   private def pagerankBody(edges: DataFrame, deg: DataFrame, n: Long): DataFrame = {
-    // The rank/degree tables are NODE-sized; the checkpointed ones carry
-    // no stats (a LogicalRDD defaults to "huge"), so without the explicit
-    // hint every iteration would shuffle the edge-sized side instead of
-    // broadcasting the node-sized one. Same 5M gate as
-    // Dedup.clustersPointerJump — past it, node tables genuinely are too
-    // big to broadcast and the shuffle join is the honest plan.
-    def maybeBc(df: DataFrame): DataFrame =
-      if (n < 5000000L) broadcast(df) else df
+    // the staged rank/degree tables are NODE-sized but carry no stats
+    val maybeBc = Checkpoints.broadcastGate(n)
     val init = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
     val ranks = Iterate.rounds(init, 5) { (ranks, _) =>
       edges.join(maybeBc(ranks), edges("src") === ranks("node"))
@@ -130,13 +124,13 @@ object Graph {
     * never the whole graph (the reason PPR serves per-entity "related
     * items" queries at 100 TB: work tracks the seed neighborhood). The
     * restart re-enters through a full-outer join against the seed table
-    * (a seed keeps its restart mass even before any walk mass returns).
-    * Same per-iteration staging and node-table broadcast gate as
-    * [[pagerankBody]]. */
+    * (a seed keeps its restart mass even before any walk mass returns);
+    * that join carries no broadcast hint, since Spark cannot build either
+    * side of a full outer join by broadcast. Same per-iteration staging
+    * and node-table broadcast gate as [[pagerankBody]]. */
   private def pprBody(edges: DataFrame, deg: DataFrame, seeds: DataFrame,
       nSeeds: Long, n: Long): DataFrame = {
-    def maybeBc(df: DataFrame): DataFrame =
-      if (n < 5000000L) broadcast(df) else df
+    val maybeBc = Checkpoints.broadcastGate(n)
     val restart = lit(0.15 / nSeeds.toDouble)
     val init = seeds.select(col("node"), lit(1.0 / nSeeds).as("rank"))
     val ranks = Iterate.rounds(init, 5) { (ranks, _) =>
@@ -145,7 +139,7 @@ object Graph {
         .select(col("dst"), (col("rank") / col("deg")).as("c"))
         .groupBy("dst").agg(sum("c").as("m"))
         .select(col("dst").as("node"), col("m"))
-      m.join(maybeBc(seeds.select(col("node"), lit(1).as("is_seed"))),
+      m.join(seeds.select(col("node"), lit(1).as("is_seed")),
           Seq("node"), "full_outer")
         .select(col("node"),
           (coalesce(lit(0.85) * col("m"), lit(0.0)) +
@@ -807,10 +801,8 @@ object Graph {
     val Q = 1000000000L
     val e = Checkpoints.stage(Tables.lineitem(s, d)
       .select(col("l_suppkey").as("sk"), col("l_partkey").as("pk")).distinct())
-    def maybeBc(df: DataFrame, n: Long): DataFrame =
-      if (n < 5000000L) broadcast(df) else df
-    val nNodes = e.select(col("sk")).distinct().count() +
-      e.select(col("pk")).distinct().count()
+    val maybeBc = Checkpoints.broadcastGate(
+      e.select(col("sk")).distinct().count() + e.select(col("pk")).distinct().count())
     def norm(df: DataFrame, key: String): DataFrame = {
       val mx = df.agg(max(col("v")).as("mx"))
       df.crossJoin(broadcast(mx))
@@ -819,9 +811,9 @@ object Graph {
             .cast("long").as("nq"))
     }
     val a1 = norm(e.groupBy("pk").agg((count(lit(1)) * Q).as("v")), "pk")
-    val h1 = norm(e.join(maybeBc(a1, nNodes), "pk").groupBy("sk").agg(sum("nq").as("v")), "sk")
-    val a2 = norm(e.join(maybeBc(h1, nNodes), "sk").groupBy("pk").agg(sum("nq").as("v")), "pk")
-    val h2 = norm(e.join(maybeBc(a2, nNodes), "pk").groupBy("sk").agg(sum("nq").as("v")), "sk")
+    val h1 = norm(e.join(maybeBc(a1), "pk").groupBy("sk").agg(sum("nq").as("v")), "sk")
+    val a2 = norm(e.join(maybeBc(h1), "sk").groupBy("pk").agg(sum("nq").as("v")), "pk")
+    val h2 = norm(e.join(maybeBc(a2), "pk").groupBy("sk").agg(sum("nq").as("v")), "sk")
     val out = h2.select(lit("hub").as("kind"), concat(lit("s"), col("sk")).as("node"),
         (col("nq").cast("double") / Q).as("score"))
       .unionByName(a2.select(lit("authority").as("kind"),
@@ -951,17 +943,15 @@ object Graph {
     * (walks never fork), broadcast under the pagerank 5M gate. */
   private def randomWalkBody(s: SparkSession, d: String): DataFrame = {
     val e = Checkpoints.stage(supplierPartEdges(s, d))
-    def maybeBc(df: DataFrame, n: Long): DataFrame =
-      if (n < 5000000L) broadcast(df) else df
     val starts = Checkpoints.stage(e.select(col("src")).where(col("src").startsWith("s"))
       .distinct().select(col("src").as("walk"), col("src").as("cur")))
-    val nStarts = starts.count()
+    val maybeBc = Checkpoints.broadcastGate(starts.count())
     var pos = starts
     // hop tables are start-set-sized checkpoints; all four feed the final
     // join, so none is freed mid-loop — finishFreeing reclaims the lot
     // once the result has materialized
     val hops = (1 to 4).map { i =>
-      val nxt = Checkpoints.stage(maybeBc(pos, nStarts).join(e, pos("cur") === e("src"))
+      val nxt = Checkpoints.stage(maybeBc(pos).join(e, pos("cur") === e("src"))
         .withColumn("h", md5(concat(col("walk"), lit(s":$i:"), col("dst"))))
         .groupBy("walk").agg(min(struct(col("h"), col("dst"))).as("b"))
         .select(col("walk"), col("b.dst").as("cur")))

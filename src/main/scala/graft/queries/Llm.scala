@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -83,7 +84,7 @@ object Llm {
       .select(col("doc_id"), md5(col("chunk")).as("h"),
         length(col("chunk")).as("clen"))
       .where(col("clen") >= 16).distinct()
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     val keep = dc.join(
       dc.groupBy("h").agg(count(lit(1)).as("nd")).where(col("nd") <= 64).select("h"), "h")
     val bytes = dc.groupBy("doc_id").agg(sum("clen").as("bytes"))
@@ -316,7 +317,7 @@ object Llm {
     // 3-gram concat_ws + array_distinct per position, which is what made
     // recompute lose here (unlike the plain token table, where staging
     // was measured slower — see Dedup.jaccardBitmask).
-    val sh = sh0.localCheckpoint(true)
+    val sh = Checkpoints.stage(sh0)
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
     val a = sh.select(col("doc_id").as("a_id"), col("sh"))
     val b = sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
@@ -709,7 +710,7 @@ object Llm {
     val nlist = graft.ops.Ivf.occupancyNlist(v.count(), targetOccupancy = 50)
     val members = graft.ops.Ivf.coarseRanked(v, nlist)
       .where(col("r") === 1).select(col("vec_id"), col("cell"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     val wCell = Window.partitionBy("cell").orderBy("vec_id")
     val small3 = members.withColumn("rk", row_number().over(wCell))
       .where(col("rk") <= 3)
@@ -731,7 +732,7 @@ object Llm {
         col("norm").as("b_n")), "nb")
       .withColumn("sim", dot(col("a_e"), col("b_e")) / (col("a_n") * col("b_n")))
     val wTop = Window.partitionBy("node").orderBy(col("sim").desc, col("nb"))
-    val nb0 = own.unionByName(nxt).distinct().localCheckpoint(true)
+    val nb0 = Checkpoints.stage(own.unionByName(nxt).distinct())
     val nb = graft.ops.Iterate.rounds(nb0, 2) { (nb, _) =>
       val hop2 = nb.join(nb.select(col("node").as("mid"), col("nb").as("nb2")),
           col("nb") === col("mid"))
@@ -741,7 +742,7 @@ object Llm {
         .withColumn("rk", row_number().over(wTop)).where(col("rk") <= 4)
         .select("node", "nb")
     }
-    graft.ops.Checkpoints.free(nb0)
+    Checkpoints.free(nb0)
     (nb, members)
   }
 
@@ -808,7 +809,7 @@ object Llm {
       .select(col("q_id"), col("q_e"), col("q_n"), col("cur"), col("cur_sim"),
         lit(0).as("hops"))
     val st = greedyHops(v, nb, st0, 6)
-    graft.ops.Checkpoints.finishFreeing(
+    Checkpoints.finishFreeing(
       st.select(col("q_id").as("vec_id"), col("cur").as("nn_id"),
           round(col("cur_sim"), 4).as("sim"), col("hops"),
           (col("cur") === col("q_id")).as("reached"))
@@ -826,7 +827,7 @@ object Llm {
     * is returned still checkpointed — the caller frees it. */
   private def greedyHops(v: DataFrame, nb: DataFrame,
                          st0: DataFrame, hops: Int): DataFrame = {
-    val init = st0.localCheckpoint(true)
+    val init = Checkpoints.stage(st0)
     val st = graft.ops.Iterate.rounds(init, hops) { (st, _) =>
       val best = st.select(col("q_id").as("b_q"), col("q_e").as("b_e"),
           col("q_n").as("b_n"), col("cur"))
@@ -845,7 +846,7 @@ object Llm {
           when(moved, col("best_sim")).otherwise(col("cur_sim")).as("cur_sim"),
           (col("hops") + when(moved, 1).otherwise(0)).as("hops"))
     }
-    graft.ops.Checkpoints.free(init)
+    Checkpoints.free(init)
     st
   }
 
@@ -899,7 +900,7 @@ object Llm {
         lit(0).as("hops"))
     val afterUpper = greedyHops(v, nbU, st0, 3)
     val st = greedyHops(v, nb, afterUpper, 6)
-    graft.ops.Checkpoints.finishFreeing(
+    Checkpoints.finishFreeing(
       st.select(col("q_id").as("vec_id"), col("cur").as("nn_id"),
           round(col("cur_sim"), 4).as("sim"), col("hops"),
           (col("cur") === col("q_id")).as("reached"))
@@ -1056,7 +1057,7 @@ object Llm {
       val truth = Dedup.jaccardBitmask(s, Tables.documents(s, d),
           threshold = 0.5, presentationSort = false)
         .select("a_id", "b_id", "jacc")
-      val bands = Dedup.bandKeys(tokensDistinct(s, d)).localCheckpoint(true)
+      val bands = Checkpoints.stage(Dedup.bandKeys(tokensDistinct(s, d)))
       val l = bands.select(col("doc_id").as("a_id"), col("band_i"), col("band_v"))
       val r = bands.select(col("doc_id").as("b_id"),
         col("band_i").as("bi2"), col("band_v").as("bv2"))
@@ -1261,11 +1262,11 @@ object Llm {
 
     "llm_dedup_minhash" -> ((s, d) => {
       // band table checkpointed before the self-join (two reads) — the
-      // foreach-measured trade lshVerified's eager route documents; the
+      // foreach-measured trade lshVerified's staged route documents; the
       // pair-sized result stays lazy (checkpointing IT was measured to
       // give the recompute win back), the doc-sized band block is
       // GC-reclaimed once the consumer drops the frame
-      val bands = Dedup.bandKeys(tokensDistinct(s, d)).localCheckpoint(true)
+      val bands = Checkpoints.stage(Dedup.bandKeys(tokensDistinct(s, d)))
       val l = bands.select(col("doc_id").as("a_id"), col("band_i"), col("band_v"))
       val r = bands.select(col("doc_id").as("b_id"), col("band_i").as("bi2"), col("band_v").as("bv2"))
       l.join(r, col("band_i") === col("bi2") && col("band_v") === col("bv2")
@@ -1294,7 +1295,7 @@ object Llm {
         md5(concat_ws(":", (0 until 4).map(j => col(s"t$j").cast("string")): _*)),
         md5(concat_ws(":", (4 until 8).map(j => col(s"t$j").cast("string")): _*)))))
         .toDF("doc_id", "band_i", "band_v")
-        .localCheckpoint(true) // doc-grain ×2, read twice by the self-join
+        .transform(Checkpoints.stage) // doc-grain ×2, read twice by the self-join
       val l = bands.select(col("doc_id").as("a_id"), col("band_i"), col("band_v"))
       val r = bands.select(col("doc_id").as("b_id"),
         col("band_i").as("bi2"), col("band_v").as("bv2"))
@@ -1434,12 +1435,12 @@ object Llm {
     // routines accept any pair source. DedupSpec verifies both against
     // union-find.
     "llm_dedup_clusters" -> ((s, d) => {
-      // eager=false: the pointer jump copies the pairs into its own edge
+      // lazy at 0.9: the pointer jump copies the pairs into its own edge
       // checkpoint, so the pair plan executes exactly ONCE — at the 0.9
       // dedupLate shape that single lazy execution benched 5.7 s vs 7.8 s
       // for the staged route (the staging win is the multi-read 0.5 path)
       val pairs = Dedup.lshVerified(s, Tables.documents(s, d), threshold = 0.9,
-        presentationSort = false, eager = false)
+        presentationSort = false)
       val comp = Dedup.clustersPointerJump(pairs)
       comp.groupBy("cluster_id")
         .agg(count(lit(1)).as("n_members"), min("id").as("canonical_id"))
@@ -1461,7 +1462,7 @@ object Llm {
     "llm_dedup_soft" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val pairs = Dedup.lshVerified(s, docs, threshold = 0.9,
-        presentationSort = false, eager = false)
+        presentationSort = false)
       val comp = Dedup.clustersPointerJump(pairs)
       val assigned = docs.select(col("doc_id"), col("source"))
         .join(comp.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -3059,13 +3060,13 @@ object Llm {
         .withColumn("rel", dot(col("q_e"), col("c_e")) / (col("q_n") * col("c_n")))
         .withColumn("rn", row_number().over(wR)).where(col("rn") <= 20)
         .select(col("q_id"), col("c_id"), col("c_e"), col("c_n"), col("rel"))
-        .localCheckpoint(true)
+        .transform(Checkpoints.stage)
       val wS = Window.partitionBy("q_id").orderBy(col("score").desc, col("c_id"))
       val seed = cands.withColumn("score", col("rel"))
         .withColumn("rn", row_number().over(wS)).where(col("rn") === 1)
         .select(col("q_id"), col("c_id"), col("c_e"), col("c_n"),
           lit(1).as("rank"), col("score"))
-        .localCheckpoint(true)
+        .transform(Checkpoints.stage)
       // round r picks rank r + 1
       val selected = graft.ops.Iterate.rounds(seed, 4) { (selected, r) =>
         val rem = cands.join(selected.select("q_id", "c_id"),
@@ -3081,7 +3082,7 @@ object Llm {
             lit(r + 1).as("rank"), col("score"))
         selected.unionByName(pick)
       }
-      graft.ops.Checkpoints.finishFreeing(
+      Checkpoints.finishFreeing(
         selected.select(col("q_id"), col("rank"), col("c_id"),
             (floor(col("score") * 1e4) / 1e4).as("score"))
           .orderBy("q_id", "rank"),
@@ -3998,9 +3999,9 @@ object Llm {
     // cluster-keyed window.
     "llm_dedup_survivors" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      // eager=false for the same single-consumption reason as the clusters key
+      // lazy at 0.9 for the same single-consumption reason as the clusters key
       val pairs = Dedup.lshVerified(s, docs, threshold = 0.9,
-        presentationSort = false, eager = false)
+        presentationSort = false)
       val comp = Dedup.clustersPointerJump(pairs)
       val assigned = docs.join(comp, docs("doc_id") === comp("id"), "left")
         .select(col("doc_id"),
@@ -4183,7 +4184,7 @@ object Llm {
         .withColumn("ref_id", lead(col("doc_id"), 1).over(w))
         .where(col("ref_id").isNotNull)
         .select(col("doc_id"), col("ref_id"))
-        .localCheckpoint(true) // pair list: one row per doc with a successor
+        .transform(Checkpoints.stage) // pair list: one row per doc with a successor
       val uni = docs.select(col("doc_id"), explode(col("toks")).as("g"))
         .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
       val big = docs
@@ -4282,7 +4283,7 @@ object Llm {
           when(col("n_chars") > col("nc2"), col("source")).otherwise(col("src2")).as("winner"),
           when(col("n_chars") > col("nc2"), col("src2")).otherwise(col("source")).as("loser"))
       val cells = duels.groupBy("winner", "loser").agg(count(lit(1)).as("w"))
-        .localCheckpoint(true) // source² grain
+        .transform(Checkpoints.stage) // source² grain
       val games = cells.select(col("winner").as("i"), col("loser").as("j"), col("w"))
         .unionByName(cells.select(col("loser").as("i"), col("winner").as("j"), col("w")))
         .groupBy("i", "j").agg(sum("w").as("nij"))
@@ -4308,13 +4309,13 @@ object Llm {
         val raw = denom.join(wins, Seq("i"), "left")
           .select(col("i"),
             (coalesce(col("wi"), lit(0L)).cast("double") / col("den")).as("sraw"))
-          .localCheckpoint(true) // source-grain (k rows)
+          .transform(Checkpoints.stage) // source-grain (k rows)
         val tot = raw.agg(expr("aggregate(array_sort(collect_list(named_struct('i', i, 'x', sraw))), " +
           "CAST(0.0 AS DOUBLE), (acc, e) -> acc + e.x)").as("tots"))
         raw.crossJoin(broadcast(tot)).crossJoin(broadcast(kcnt))
           .select(col("i"),
             (col("sraw") * col("k").cast("double") / col("tots")).as("sv"))
-          .localCheckpoint(true) // k rows — frees the duel lineage per level
+          .transform(Checkpoints.stage) // k rows — frees the duel lineage per level
       }
       val v3 = step(step(step(srcs.withColumn("sv", lit(1.0)))))
       v3.join(gtot, "i").join(wins, Seq("i"), "left")
@@ -4454,7 +4455,7 @@ object Llm {
         .withColumn("csim", dot(col("embedding"), col("centroid"))
           / (col("norm") * col("cnorm")))
         .select(col("vec_id"), col("cell"), col("csim"))
-        .localCheckpoint(true) // 8·|v| affinity rows, read by gate + route
+        .transform(Checkpoints.stage) // 8·|v| affinity rows, read by gate + route
       val wA = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
       val gated = aff
         .groupBy("vec_id")
@@ -4549,12 +4550,12 @@ object Llm {
         .select(col("bkt"), col("h"), col("doc_id"),
           when(col("n_chars") > col("nc2"), col("source")).otherwise(col("src2")).as("winner"),
           when(col("n_chars") > col("nc2"), col("src2")).otherwise(col("source")).as("loser"))
-        .localCheckpoint(true) // duel grain; read by the fold + the counts
+        .transform(Checkpoints.stage) // duel grain; read by the fold + the counts
       val srcs = Tables.documents(s, d).select("source").distinct()
       val k = srcs.count().toInt
       val idx = graft.ops.Rank.withGlobalRank(srcs, Seq(col("source").asc), "idx", "__n")
         .select(col("source"), col("idx").cast("int").as("idx"))
-        .localCheckpoint(true) // k rows
+        .transform(Checkpoints.stage) // k rows
       val dIdx = duels
         .join(broadcast(idx.select(col("source").as("winner"), col("idx").as("wi"))), "winner")
         .join(broadcast(idx.select(col("source").as("loser"), col("idx").as("li"))), "loser")
@@ -4605,7 +4606,7 @@ object Llm {
         .withColumn("ref_id", lead(col("doc_id"), 1).over(w))
         .where(col("ref_id").isNotNull)
         .select(col("doc_id"), col("ref_id"))
-        .localCheckpoint(true) // pair list: one row per doc with a successor
+        .transform(Checkpoints.stage) // pair list: one row per doc with a successor
       val uni = docs.select(col("doc_id"), explode(col("toks")).as("g"))
         .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
       val big = docs
@@ -4667,7 +4668,7 @@ object Llm {
         .withColumn("ref_id", lead(col("doc_id"), 1).over(w))
         .where(col("ref_id").isNotNull)
         .select(col("doc_id"), col("ref_id"))
-        .localCheckpoint(true) // pair list: one row per doc with a successor
+        .transform(Checkpoints.stage) // pair list: one row per doc with a successor
       val atoks = docs
         .select(col("doc_id"), posexplode(col("toks")).as(Seq("p", "tok")))
         .select(col("doc_id"), (col("p") + 1).as("i"), col("tok"))
@@ -5340,7 +5341,7 @@ object Llm {
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
       .select(col("vec_id"), col("i"),
         floor(col("x").cast("double") * 1e6).cast("long").as("xq"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     // table-grain count, NOT distinct() over the exploded checkpoint —
     // matches the oracle's count(*) FROM embeddings exactly (a row with
     // an empty embedding array would vanish from the explode but still
@@ -5361,7 +5362,7 @@ object Llm {
         (lit(nVec).cast(dec) * col("spp") - col("s_i") * col("s_j"))
           .cast("double").as("a"))
       .collect()
-    graft.ops.Checkpoints.free(e)
+    Checkpoints.free(e)
     val d64 = cells.iterator.map(_.getInt(0)).max + 1
     val mat = Array.ofDim[Double](d64, d64)
     cells.foreach(r => mat(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
@@ -5393,7 +5394,7 @@ object Llm {
       .where(length(col("token")) >= 2)
       .select(col("cnt"), expr(
         "transform(sequence(1, length(token)), i -> substring(token, i, 1))").as("syms"))
-      .localCheckpoint(true)
+      .transform(Checkpoints.stage)
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     val vocab = graft.ops.Iterate.rounds(vocab0, 4) { (vocab, r) =>
       val pairs = vocab
@@ -5413,8 +5414,8 @@ object Llm {
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
             .otherwise(concat(acc, array(x)))).as("syms"))
     }
-    graft.ops.Checkpoints.free(vocab0)
-    graft.ops.Checkpoints.free(vocab)
+    Checkpoints.free(vocab0)
+    Checkpoints.free(vocab)
     merges.toSeq
   }
 
@@ -5777,29 +5778,6 @@ object Llm {
       |  JOIN qdt q ON q.vec_id = qa.vec_id
       |  JOIN words wb ON wb.vec_id = qb.vec_id
       |)""".stripMargin
-
-  /** Pre-checkpoint LAZY twins for plan audit (PlanScan/PlanShapeSpec):
-    * identical operator structure to [[queries]] minus the eager
-    * checkpoint materialization, so exchange counts, join strategies, and
-    * window placement stay inspectable after the r7 foreach-trade change
-    * made the registry routes return checkpointed results. The
-    * clusters/survivors keys have no lazy whole-plan (pointer jumping is
-    * data-dependently iterative — the graph_cc situation); their
-    * pair-construction plan is llm_dedup_lsh_verified's own, audited
-    * here. */
-  val auditPlans: Map[String, Q] = Map(
-    "llm_dedup_lsh_verified" -> ((s, d) =>
-      Dedup.lshVerified(s, Tables.documents(s, d), threshold = 0.5,
-        presentationSort = true, eager = false)),
-    "llm_dedup_minhash" -> ((s, d) => {
-      val bands = Dedup.bandKeys(tokensDistinct(s, d))
-      val l = bands.select(col("doc_id").as("a_id"), col("band_i"), col("band_v"))
-      val r = bands.select(col("doc_id").as("b_id"), col("band_i").as("bi2"), col("band_v").as("bv2"))
-      l.join(r, col("band_i") === col("bi2") && col("band_v") === col("bv2")
-          && col("a_id") < col("b_id"))
-        .groupBy("a_id", "b_id").agg(count(lit(1)).as("n_bands"))
-        .orderBy("a_id", "b_id")
-    }))
 
   val oracles: Map[String, String] = Map(
     // Mirrors the Spark canonicalization chain step-for-step; DuckDB's

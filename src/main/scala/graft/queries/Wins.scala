@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.ops.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1079,7 +1080,7 @@ object Wins {
       val t = daily
         .withColumn("trend", when(count(lit(1)).over(wMa) === 7, avg("v").over(wMa)))
         .withColumn("dow", dayofweek(col("day")) - 1)
-        .localCheckpoint()
+        .transform(Checkpoints.stage)
       val sIdx = t.where(col("trend").isNotNull)
         .groupBy("dow").agg(avg(col("v") - col("trend")).as("s_raw"))
       val sAdj = sIdx

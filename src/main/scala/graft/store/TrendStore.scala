@@ -40,9 +40,9 @@ final class TrendStore(
     * partitions the batch touches (dynamic partition overwrite), so cost
     * tracks batch days, not store size: at 100 TB a late one-day batch
     * rewrites one day. The affected-day list is batch-sized (collected to
-    * drive static partition pruning of the base read), and the merged frame
-    * is locally checkpointed before the write because Spark refuses plans
-    * that read from the path they overwrite.
+    * drive static partition pruning of the base read), and the merge and
+    * rewrite are [[graft.ops.Upsert.overwriteDays]], which stages the
+    * merged frame before the overwrite.
     */
   def upsert(batch: DataFrame, granularity: String): Unit = {
     val missing = (keyCols ++ counters).filterNot(batch.columns.contains)
@@ -60,17 +60,7 @@ final class TrendStore(
     val days = batchD.select("d").distinct().collect().map(_.getString(0)).toSeq
     val base = read(granularity).where(col("d").isin(days: _*))
       .select(batchD.columns.map(col): _*)
-    val merged = graft.ops.Upsert
-      .lastWriterWins(base, batchD, keyCols)
-      .localCheckpoint(true)
-    merged.write.mode(SaveMode.Overwrite)
-      // writer-local, NOT session conf: other writers on this session must
-      // keep their own overwrite semantics
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("d").parquet(dir(granularity))
-    // the write consumed the checkpoint; reclaim its blocks now instead of
-    // leaving them to tax the rest of the JVM until a GC happens to run
-    graft.ops.Checkpoints.free(merged)
+    graft.ops.Upsert.overwriteDays(base, batchD, keyCols, dir(granularity))
   }
 
   /** Read one granularity, asserting the declared columns exist. Filters on

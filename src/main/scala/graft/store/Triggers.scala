@@ -55,13 +55,7 @@ object Triggers {
       .withColumn("d", col("d").cast("string"))
       .where(col("d").isin(days: _*))
       .select(batchD.columns.map(col): _*)
-    val merged = graft.ops.Upsert
-      .lastWriterWins(base, batchD, Seq("entity_id", "ts", "rule"))
-      .localCheckpoint(true)
-    merged.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("d").parquet(dir)
-    graft.ops.Checkpoints.free(merged)
+    graft.ops.Upsert.overwriteDays(base, batchD, Seq("entity_id", "ts", "rule"), dir)
   }
 
   /** Append notifications to the store (append-only, day-partitioned). */

@@ -1037,19 +1037,19 @@ object Streams {
           val stored = graft.Fs.existsNonEmptyData(bs, idxDir)
           val (pairs, batchBands) =
             if (stored)
-              // eager: batch bands + masks staged as checkpoints (freed
-              // below once BOTH consumers — pair write and index append —
-              // have run) — the foreach-measured branch-reuse trade
+              // a stored index stages batch bands + masks (freed below
+              // once BOTH consumers — pair write and index append — have
+              // run) — the foreach-measured branch-reuse trade
               // lshVerified documents. The returned band table is the
               // staged one, so the index append below recomputes nothing.
               graft.queries.Dedup.lshVerifiedIncrementalWithBands(bs,
                 bs.read.parquet(corpusDir), batch, threshold = 0.9,
                 gate = graft.queries.Dedup.BroadcastDocs,
-                Some(bs.read.parquet(idxDir)), eager = true)
-            else // first batch: no corpus yet, in-batch peers only (lazy:
-              // quarter-sized, consumed once by the write below)
+                Some(bs.read.parquet(idxDir)))
+            else // first batch: no corpus yet, in-batch peers only (lazy at
+              // 0.9: quarter-sized, consumed once by the write below)
               (graft.queries.Dedup.lshVerified(bs, batch, threshold = 0.9,
-                presentationSort = false, eager = false), null)
+                presentationSort = false), null)
           val out = pairs.select(
             greatest(col("a_id"), col("b_id")).as("dup_id"),
             least(col("a_id"), col("b_id")).as("orig_id"), col("jacc"))

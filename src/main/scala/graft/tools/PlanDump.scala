@@ -8,13 +8,13 @@ import graft.SparkEntry
   * the optimization-round evidence artifact (plans/r12/<key>_<tag>.txt).
   * Usage: `sbt "runMain graft.tools.PlanDump <outDir> <tag> <key>[,<key>...]"`.
   *
-  * Keys whose registry route executes eagerly (graph family / eager dedup
-  * staging) are dumped through [[PlanScan.auditOverrides]] — a graph key's
-  * own route run lazily under `Checkpoints.auditLazily`, a dedup key's
-  * lazy twin; the same plan PlanShapeSpec judges — because the registry
-  * route's returned frame is a LogicalRDD scan whose formatted plan would
-  * be vacuous. Streaming keys have no batch plan
-  * (IncrementalExecution) and are skipped with a stub note. */
+  * Keys whose registry route executes eagerly (graph family / staged
+  * dedup tables) are dumped through [[PlanScan.auditOverrides]] — the
+  * key's own route run lazily under `Checkpoints.auditLazily`, the same
+  * plan PlanShapeSpec judges — because the registry route's returned
+  * frame is a LogicalRDD scan whose formatted plan would be vacuous.
+  * Streaming keys have no batch plan (IncrementalExecution) and are
+  * skipped with a stub note. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)

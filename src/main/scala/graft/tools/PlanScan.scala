@@ -36,19 +36,21 @@ object PlanScan {
       "geo_dbscan_label") // pointer-jump loop executes eagerly (graph_cc)
 
   /** How the audits read a key whose registry route executes eagerly
-    * (checkpoint hygiene) and would otherwise show only a LogicalRDD scan.
-    * A graph key runs its own registry route inside
-    * [[graft.ops.Checkpoints.auditLazily]], where staging and the
-    * per-round loops compose the plan instead of executing it — the
-    * audited plan is the shipped plan by construction. The eager dedup
-    * routes use their lazy twins in [[graft.queries.Llm.auditPlans]].
-    * Shared by this audit, PlanDump and PlanShapeSpec so they can't
-    * disagree about which plan a key is judged on. */
+    * (checkpoint hygiene) and would otherwise show only a LogicalRDD scan:
+    * every non-skipped graph key plus the two staged dedup keys
+    * (`llm_dedup_lsh_verified`, `llm_dedup_minhash`) run their own
+    * registry route inside [[graft.ops.Checkpoints.auditLazily]], where
+    * staging and the per-round loops compose the plan instead of
+    * executing it — the audited plan is the shipped plan by construction.
+    * Not every key: lazily unrolled loop keys explode (`llm_hnsw_search`
+    * 0 → 2559 exchanges). Shared by this audit, PlanDump and PlanShapeSpec
+    * so they can't disagree about which plan a key is judged on. */
   def auditOverrides: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Graph.queries.collect {
-      case (k, q) if !skipKeys.contains(k) =>
-        k -> ((s: SparkSession, d: String) => Checkpoints.auditLazily(q(s, d)))
-    } ++ graft.queries.Llm.auditPlans
+    (graft.queries.Graph.queries.keySet -- skipKeys +
+      "llm_dedup_lsh_verified" + "llm_dedup_minhash").map { k =>
+      val q = SparkEntry.queries(k)
+      k -> ((s: SparkSession, d: String) => Checkpoints.auditLazily(q(s, d)))
+    }.toMap
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")

@@ -250,9 +250,9 @@ class DedupSpec extends SparkSpec {
 
     // the candidate-scoped mask dictionary (gate=0 forces the large-corpus
     // route) must not change a single pair or jacc value
-    val scoped = Dedup.lshVerifiedIncrementalGated(spark,
+    val scoped = Dedup.lshVerifiedIncrementalWithBands(spark,
         corpus = docs.where(col("doc_id") < split),
-        batch = docs.where(col("doc_id") >= split), threshold = 0.9, gate = 0L)
+        batch = docs.where(col("doc_id") >= split), threshold = 0.9, gate = 0L)._1
       .collect().map { r =>
         val (a, b) = (r.getLong(0), r.getLong(1))
         (math.max(a, b), math.min(a, b), r.getDouble(2))
@@ -339,5 +339,20 @@ class DedupSpec extends SparkSpec {
     val sig4 = Dedup.ophSlots(other).collect()
       .map(r => (1 to 8).map(r.getLong).toSeq).head
     assert(sig4 != sigs(2L))
+  }
+
+  test("lshVerified stages nothing at 0.9 and exactly its band and mask blocks at 0.5") {
+    // the staging rule: only the early-dedup (< 0.7) route reads its band
+    // and mask tables twice, so only it stages them
+    val docs = Tables.documents(spark, sf0001)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val late = Dedup.lshVerified(spark, docs, 0.9)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before == Set.empty)
+    assert(checkpointIds(late).isEmpty)
+    val early = Dedup.lshVerified(spark, docs, 0.5)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size == 2, s"expected the band and mask blocks, got $added")
+    assert(checkpointIds(early) == added)
+    graft.ops.Checkpoints.freeAll(early)
   }
 }

@@ -94,15 +94,26 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
-  test("custom functions are registered only from the Kernels catalogue") {
-    val root = java.nio.file.Paths.get("src/main")
-    val calls = "createOrReplaceTempFunction|registerFunction|injectFunction".r
-    val st = java.nio.file.Files.walk(root)
-    val offenders = try st.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+  /** File names under `src/main` whose source matches `calls`. */
+  private def mainSourcesCalling(calls: scala.util.matching.Regex): Set[String] = {
+    val st = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    try st.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
       .filter(_.toString.endsWith(".scala"))
       .filter(p => calls.findFirstIn(new String(java.nio.file.Files.readAllBytes(p))).nonEmpty)
       .map(_.getFileName.toString).toSet
     finally st.close()
+  }
+
+  test("custom functions are registered only from the Kernels catalogue") {
+    val offenders = mainSourcesCalling(
+      "createOrReplaceTempFunction|registerFunction|injectFunction".r)
     assert(offenders == Set("Kernels.scala", "GraftExtensions.scala"), offenders)
+  }
+
+  test("every localCheckpoint goes through Checkpoints.stage") {
+    // Checkpoints.stage is the one staging path, so auditLazily sees every
+    // stage. `\.localCheckpoint\b` also catches the paren-less call form.
+    val offenders = mainSourcesCalling("""\.localCheckpoint\b""".r)
+    assert(offenders == Set("Checkpoints.scala"), offenders)
   }
 }

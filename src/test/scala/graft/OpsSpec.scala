@@ -64,11 +64,6 @@ class OpsSpec extends SparkSpec {
       "free must drop the RDD from the persistence registry without waiting for GC")
   }
 
-  private def checkpointIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-
   test("Iterate.rounds leaves only the caller's init and the returned stage persisted") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val init = spark.range(100).toDF("id").localCheckpoint(true)
@@ -109,7 +104,8 @@ class OpsSpec extends SparkSpec {
 
   test("inside auditLazily graph keys return their lazy plan and persist nothing; fixpoints refuse") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    Seq("graph_pagerank", "graph_katz").foreach { k =>
+    Seq("graph_pagerank", "graph_katz",
+        "llm_dedup_lsh_verified", "llm_dedup_minhash").foreach { k =>
       val audited = Checkpoints.auditLazily(SparkEntry.queries(k)(spark, sf0001))
       assert(checkpointIds(audited).isEmpty, s"$k: audited plan still reads a checkpoint")
       assert(spark.sparkContext.getPersistentRDDs.keySet -- before == Set.empty,

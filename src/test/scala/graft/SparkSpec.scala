@@ -12,6 +12,12 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Ids of the checkpointed RDDs under `df`'s plan (its LogicalRDD leaves). */
+  def checkpointIds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
 }
 
 object SparkSpec {
