@@ -278,10 +278,12 @@ object Fs {
     (dirsOut, filesOut)
   }
 
-  /** Read a small control file (fingerprint, marker) as UTF-8, if present. */
+  /** Read a small control file (fingerprint, marker, state) as UTF-8;
+    * `None` when nothing or a directory is at `file` (a directory there is
+    * a store written before the control file existed). */
   def readUtf8(spark: SparkSession, file: String): Option[String] = {
     val (fs, p) = fileSystem(spark, file)
-    if (!fs.exists(p)) None
+    if (!fs.exists(p) || fs.getFileStatus(p).isDirectory) None
     else {
       val in = fs.open(p)
       try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
@@ -289,11 +291,18 @@ object Fs {
     }
   }
 
-  /** Overwrite a small control file with UTF-8 `content`. */
+  /** Replace a small control file with UTF-8 `content`: the bytes go to
+    * `<file>.tmp`, whatever is at `file` is deleted (a directory too), and
+    * the temp file is renamed into place, so a reader never sees a torn
+    * file. A crash between the delete and the rename leaves no `file` and
+    * a complete `<file>.tmp`; each reader decides what that means. */
   def writeUtf8(spark: SparkSession, file: String, content: String): Unit = {
     val (fs, p) = fileSystem(spark, file)
-    val out = fs.create(p, true)
+    val tmp = new Path(file + ".tmp")
+    val out = fs.create(tmp, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    fs.delete(p, true)
+    if (!fs.rename(tmp, p)) throw new java.io.IOException(s"could not rename $tmp to $file")
   }
 }

@@ -1,85 +1,73 @@
 package graft.materialize
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Incremental, fingerprint-gated materialization — the Spark-native
   * re-expression of the reference's materialization machinery: a derived
   * (materialized) table is recomputed per time bucket, and a bucket is
-  * recomputed only when the fingerprint of its source rows has changed
-  * since the last run. A stability delay keeps "hot" buckets (which may
-  * still receive late data) out of materialization until they settle.
+  * recomputed only when the fingerprint of its source has changed since
+  * the last run. A stability delay keeps "hot" buckets (which may still
+  * receive late data) out of materialization until they settle.
   *
   * Mechanics:
-  *  - fingerprint(bucket) = (row count, bit_xor of xxhash64 over all
-  *    columns, DECIMAL sum of the same hashes) — order-independent and
-  *    overflow-free, computed with one aggregation over the source
-  *    (map-side partial, one shuffle on the bucket key) and collected to
-  *    the driver.
-  *  - state = parquet at `stateDir` holding (bucket, fingerprint), read
-  *    with an explicit schema and compared with the fingerprints on the
-  *    driver: a source bucket is stale when the state has no entry for it
-  *    or a different one. Buckets that vanished from the source are not
-  *    recomputed; their state entries and derived rows stay until the
-  *    retention cut passes them.
+  *  - fingerprint = a `fingerprint` function from the source to one
+  *    opaque string per bucket, compared only for equality. Two exist, and
+  *    both feed the one compare/commit below:
+  *    - [[contentFingerprints]] (the default): row count, bit_xor of
+  *      xxhash64 over all columns and the DECIMAL sum of the same hashes,
+  *      one aggregation over every source row (map-side partial, one
+  *      shuffle on the bucket key) collected to the driver. Right for any
+  *      source, including ones rewritten in place or not backed by files.
+  *    - [[fileFingerprints]]: the file count and a hash of the file names
+  *      under each `bucket=` directory of the source's own listing, with
+  *      no Spark job. Right only for a store whose files are immutable and
+  *      uniquely named (append-only writes, partition-level deletes), such
+  *      as the harvest loop's raw store.
+  *  - state = a control file at `stateFile`, one `fingerprint<TAB>bucket`
+  *    line per bucket, read on the driver. A source bucket is stale when
+  *    the state has no entry for it or a different one. Buckets that
+  *    vanished from the source are not recomputed; their state entries
+  *    and derived rows stay until the retention cut passes them.
   *  - recompute = transform(source rows of stale buckets) written with
   *    dynamic partition overwrite into `targetDir/bucket=...` — untouched
   *    buckets keep their files; the write is idempotent per bucket.
   *  - commit = the previous state with the stale buckets' fresh
   *    fingerprints merged in and the buckets below the retention cut
-  *    dropped, written once to `stateDir.tmp`, which then replaces
-  *    `stateDir` (delete, then rename). A crash between the two leaves no
-  *    state, which reads as empty: a conservative full recompute. A pass
-  *    that changes nothing writes nothing.
+  *    dropped, written once through [[graft.Fs.writeUtf8]] (`.tmp`, then
+  *    delete and rename). A pass that changes nothing writes nothing.
+  *  - no usable state (missing, or a crash between the commit's delete
+  *    and rename, or a parquet state directory written before the state
+  *    was a control file) reads as empty: one conservative full
+  *    recompute, whose commit replaces whatever was there.
   *
   * The fingerprints, the state and the stale-bucket list live on the
   * driver: their cardinality is the number of *time buckets*, bounded by
   * the retention window (e.g. hours in a year ≈ 8.8k), not by data
   * volume — safe at 100 TB.
   */
-final class Materializer(spark: SparkSession, stateDir: String) {
+final class Materializer(
+    spark: SparkSession,
+    stateFile: String,
+    fingerprint: DataFrame => Map[String, String] = Materializer.contentFingerprints) {
 
-  import Materializer._
+  import Materializer.MaterializeResult
 
-  /** bucket -> fingerprint. graft.Fs answers existence on the state dir's
-    * OWN filesystem and ignores write markers: a crash that left only
-    * _temporary/_SUCCESS behind degrades to the empty state (conservative
-    * full recompute) instead of a permanent parquet read failure. State
-    * written before fp_sum joined the fingerprint reads it as NULL, so
-    * every such bucket compares stale once. */
-  private def readState(): Map[String, Fingerprint] =
-    if (graft.Fs.existsNonEmptyData(spark, stateDir))
-      toFingerprints(spark.read.schema(StateSchema).parquet(stateDir).collect())
-    else Map.empty
+  /** bucket -> fingerprint from the state file; empty when there is none. */
+  private[graft] def readState(): Map[String, String] =
+    graft.Fs.readUtf8(spark, stateFile).toSeq.flatMap(_.split("\n")).filter(_.nonEmpty)
+      .map { line =>
+        val tab = line.indexOf('\t')
+        line.substring(tab + 1) -> line.substring(0, tab)
+      }.toMap
 
-  /** Fingerprint every bucket of `source` (bucket column must be named
-    * `bucket` and be string-typed; callers derive it, e.g.
-    * `date_format(date_trunc("hour", ts), "yyyy-MM-dd HH")`). */
-  private def fingerprints(source: DataFrame): DataFrame = {
-    val dataCols = source.columns.filter(_ != "bucket").sorted.map(col)
-    val h = xxhash64(dataCols: _*)
-    // xor alone cancels over pairs of identical rows (blind to changes of
-    // even multiplicity); the DECIMAL(38,0) hash sum is multiset-sensitive
-    // and overflow-free, and the row count guards both
-    source.groupBy("bucket").agg(
-      count(lit(1)).as("fp_count"),
-      bit_xor(h).as("fp_hash"),
-      sum(h.cast(DecimalType(38, 0))).as("fp_sum"))
-  }
-
-  /** Write `state` to `stateDir.tmp`, then swap it in for `stateDir`. */
-  private def commit(state: Map[String, Fingerprint]): Unit = {
-    val rows = state.toSeq.sortBy(_._1).map { case (b, f) => Row(b, f.count, f.hash, f.sum) }
-    val tmp = stateDir + ".tmp"
-    spark.createDataFrame(rows.asJava, StateSchema).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val (fs, dst) = graft.Fs.fileSystem(spark, stateDir)
-    fs.delete(dst, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
-      throw new java.io.IOException(s"could not rename $tmp to $stateDir")
+  private def commit(state: Map[String, String]): Unit = {
+    require(state.keys.forall(!_.contains('\n')), "bucket values must not contain a newline")
+    graft.Fs.writeUtf8(spark, stateFile,
+      state.toSeq.sortBy(_._1).map { case (b, f) => s"$f\t$b\n" }.mkString)
   }
 
   /** Run one materialization pass; returns the buckets recomputed.
@@ -101,8 +89,9 @@ final class Materializer(spark: SparkSession, stateDir: String) {
       stableBefore: Option[String] = None,
       retainFrom: Option[String] = None): MaterializeResult = {
 
-    val gates = stableBefore.map(col("bucket") < _) ++ retainFrom.map(col("bucket") >= _)
-    val fps = toFingerprints(gates.foldLeft(fingerprints(source))(_ where _).collect())
+    val fps = fingerprint(source).filter { case (b, _) =>
+      stableBefore.forall(b < _) && retainFrom.forall(b >= _)
+    }
     val state = readState()
     val stale = fps.collect { case (b, f) if !state.get(b).contains(f) => b }.toSeq.sorted
 
@@ -133,16 +122,36 @@ object Materializer {
     def nRecomputed: Int = recomputedBuckets.size
   }
 
-  /** One bucket's fingerprint; `sum` is null in state written before it
-    * existed, which never equals a computed fingerprint. */
-  private final case class Fingerprint(count: Long, hash: Long, sum: java.math.BigDecimal)
+  /** Content fingerprint of every non-null bucket of `source` (bucket
+    * column must be named `bucket` and be string-typed; callers derive
+    * it, e.g. `date_format(date_trunc("hour", ts), "yyyy-MM-dd HH")`). */
+  def contentFingerprints(source: DataFrame): Map[String, String] = {
+    val dataCols = source.columns.filter(_ != "bucket").sorted.map(col)
+    val h = xxhash64(dataCols: _*)
+    // xor alone cancels over pairs of identical rows (blind to changes of
+    // even multiplicity); the DECIMAL(38,0) hash sum is multiset-sensitive
+    // and overflow-free, and the row count guards both
+    source.where(col("bucket").isNotNull).groupBy("bucket").agg(
+        count(lit(1)), bit_xor(h), sum(h.cast(DecimalType(38, 0))))
+      .collect().map(r => r.getString(0) -> s"${r.getLong(1)}:${r.getLong(2)}:${r.getDecimal(3)}")
+      .toMap
+  }
 
-  private val StateSchema = StructType(Seq(
-    StructField("bucket", StringType),
-    StructField("fp_count", LongType),
-    StructField("fp_hash", LongType),
-    StructField("fp_sum", DecimalType(38, 0))))
-
-  private def toFingerprints(rows: Array[Row]): Map[String, Fingerprint] =
-    rows.map(r => r.getString(0) -> Fingerprint(r.getLong(1), r.getLong(2), r.getDecimal(3))).toMap
+  /** Listing fingerprint of every bucket of a file-backed `source`: for
+    * each `bucket=` directory among `source.inputFiles`, the file count
+    * and a SHA-256 of the sorted file names. Driver-side and job-free: the
+    * listing is the one the source's read already made, so the
+    * fingerprint describes exactly the files a recompute reads. Sound only
+    * while the store's files are immutable and uniquely named (see the
+    * class doc). */
+  def fileFingerprints(source: DataFrame): Map[String, String] =
+    source.inputFiles.toSeq.map(f => new Path(new java.net.URI(f)))
+      .groupBy(_.getParent.getName)
+      .collect { case (dir, files) if dir.startsWith("bucket=") =>
+        val names = files.map(_.getName).sorted.mkString("\n")
+        val sha = java.security.MessageDigest.getInstance("SHA-256")
+          .digest(names.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        ExternalCatalogUtils.unescapePathName(dir.stripPrefix("bucket=")) ->
+          s"${files.size}:${sha.map("%02x".format(_)).mkString}"
+      }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{broadcast, count, lit}
 
 /** The one staging path, and deterministic reclamation of what it stages.
   *
@@ -66,13 +66,27 @@ object Checkpoints {
   def stage(df: DataFrame): DataFrame =
     if (auditing) df else df.localCheckpoint(true)
 
+  /** [[stage]] and the staged row count. The count is an `Observation`
+    * on the staging job itself, so it costs no job of its own. Inside
+    * [[auditLazily]] the stage never runs (the observation would never
+    * fire), so the count is a plain `count()` there. */
+  def stageCounted(df: DataFrame): (DataFrame, Long) =
+    if (auditing) (df, df.count())
+    else {
+      val rows = Observation()
+      val staged = stage(df.observe(rows, count(lit(1)).as("n")))
+      (staged, rows.get("n").asInstanceOf[Long])
+    }
+
   /** Row count under which [[broadcastGate]] broadcasts a table. */
   val BroadcastNodes = 5000000L
 
   /** `broadcast(df)` when the table's measured row count is under
-    * [[BroadcastNodes]], else `df`. A staged frame has no statistics (the
-    * planner sizes it as huge), so without the hint every join against a
-    * staged node table would shuffle the edge-sized side. */
+    * [[BroadcastNodes]], else `df`. A staged frame keeps the estimated
+    * statistics of the plan it was built from, so the planner does
+    * broadcast small staged tables by itself; but estimates through joins
+    * and aggregates can be far off in either direction, and the gate
+    * decides from a measured count instead. */
   def broadcastGate(rows: Long): DataFrame => DataFrame =
     df => if (rows < BroadcastNodes) broadcast(df) else df
 

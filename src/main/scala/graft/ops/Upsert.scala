@@ -39,21 +39,15 @@ object Upsert {
     * `batch` into `base` (the store's rows for the days `batch` touches),
     * then a dynamic overwrite of just those `d` partitions of `dir`.
     *
-    * The merge is staged before the write. Inside
-    * [[Checkpoints.auditLazily]] it stays lazy and reads the partitions it
-    * overwrites; dynamic overwrite writes to a staging directory and
-    * replaces the partitions only at commit, so the store ends up with the
-    * same rows (StoreSpec pins that). */
+    * The merge is not staged: the dynamic overwrite runs it once, writes
+    * to a staging directory and replaces the partitions only at commit,
+    * so reading the partitions it overwrites is safe (StoreSpec pins the
+    * stored rows). */
   def overwriteDays(base: DataFrame, batch: DataFrame, keys: Seq[String],
-                    dir: String): Unit = {
-    val merged = Checkpoints.stage(lastWriterWins(base, batch, keys))
-    merged.write.mode(SaveMode.Overwrite)
+                    dir: String): Unit =
+    lastWriterWins(base, batch, keys).write.mode(SaveMode.Overwrite)
       // writer-local, NOT session conf: other writers on this session must
       // keep their own overwrite semantics
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("d").parquet(dir)
-    // the write consumed the checkpoint; reclaim its blocks now instead of
-    // leaving them to tax the rest of the JVM until a GC happens to run
-    Checkpoints.free(merged)
-  }
 }

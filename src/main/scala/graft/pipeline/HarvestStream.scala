@@ -21,8 +21,8 @@ import graft.store.Triggers
   * Exactly-once, strictly stronger than the batch loop's:
   *  - **File tracking** lives in the streaming checkpoint (the file
   *    source's commit log) — the engine-managed equivalent of the batch
-  *    loop's ingest-log parquet. A file is never offered twice after its
-  *    epoch commits.
+  *    loop's ingest-log control file. A file is never offered twice after
+  *    its epoch commits.
   *  - **Raw-store idempotence** closes the crash window the batch loop
   *    documents (re-ingest appending duplicate rows): every batch writes
   *    its rows under `ingest_batch=<epoch id>` partitions with dynamic
@@ -56,7 +56,7 @@ final class HarvestStream(
   import HarvestLoop.TickReport
 
   private val rawDir = s"$workDir/raw"
-  private val stateDir = s"$workDir/state"
+  private val stateFile = s"$workDir/state"
   val derivedDir = s"$workDir/derived"
   val notificationsDir = s"$workDir/notifications"
 
@@ -98,10 +98,10 @@ final class HarvestStream(
 
     val raw = spark.read.option("basePath", rawDir).parquet(rawDir)
       .drop("ingest_batch")
-    val result = new Materializer(spark, stateDir)
+    val result = new Materializer(spark, stateFile)
       .materialize(raw, transform, derivedDir, None)
-    val raised = HarvestLoop.notifyRecomputed(spark, derivedDir, result.recomputedBuckets,
-      rules, notificationsDir)
+    val raised = HarvestLoop.notifyRecomputed(spark, derivedDir, transform(raw).schema,
+      result.recomputedBuckets, rules, notificationsDir)
     TickReport(Nil, result.recomputedBuckets, raised)
   }
 }

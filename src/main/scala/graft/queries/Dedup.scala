@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.ops.{Checkpoints, Iterate}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -376,28 +376,29 @@ object Dedup {
     * round's label table is staged, the superseded one freed at once.
     */
   def clustersPointerJump(pairs: DataFrame): DataFrame = {
-    // Materialize the PAIR list once, BEFORE mirroring it into edges: the
-    // union references its input twice, so checkpointing only the union
-    // would still execute the (typically expensive — LSH + verification)
-    // pair plan twice. Checkpoint the one-directional projection first;
-    // the mirror is then a narrow op over in-memory partitions. Measured
-    // on the lshVerified-fed clusters key: 14.1 s → ~8.5 s at sf0.1.
-    val p = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+    // Mirror the pair list into edges inside ONE staged projection: each
+    // pair row explodes into both directions, so the (typically expensive
+    // — LSH + verification) pair plan runs once, and only the edge table
+    // is staged (a union of the pairs with their mirror would run it twice)
+    val edges = pairs
+      .select(explode(array(
+        struct(col("a_id").as("src"), col("b_id").as("dst")),
+        struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
+      .select("e.src", "e.dst")
       .transform(Checkpoints.stage)
-    val edges = p
-      .unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
-      .transform(Checkpoints.stage)
-    Checkpoints.free(p) // edges materialized; the projection is dead weight
     val nodes = edges.select(col("src").as("id")).distinct()
-    val labels0 = Checkpoints.stage(nodes.withColumn("cluster_id", col("id")))
+    val (labels0, nNodes) = Checkpoints.stageCounted(nodes.withColumn("cluster_id", col("id")))
     // Size gate, measured once: below ~5M nodes the label table is a few
     // tens of MB — broadcast it and the per-round edge join plus the label
     // update run map-side (one shuffle per round instead of three). Above
     // the gate (100 TB corpora have billions of nodes) broadcasting is
-    // impossible, so fall back to plain shuffle joins; the checkpointed
-    // plans lack stats, which is why the planner can't make this call
-    // itself.
-    val maybeBc = Checkpoints.broadcastGate(labels0.count())
+    // impossible, so fall back to plain shuffle joins. The planner's own
+    // estimate for the staged label table comes through a distinct over
+    // the edges and can be far off, so the gate uses the measured count.
+    val maybeBc = Checkpoints.broadcastGate(nNodes)
+    // each round's stage observes max(chg); convergence reads it from
+    // the staging job that already ran instead of scanning the stage again
+    var changed: Observation = null
     val labels = Iterate.untilFixpoint(labels0, 50) { (cur, _) =>
       val labels = cur.drop("chg")
       val neighborMin = edges
@@ -412,14 +413,15 @@ object Dedup {
       // join + coalesce covers a label whose node sits in another partition
       // of the forest mid-flight.
       val parents = prop.select(col("id").as("p_id"), col("cluster_id").as("p_cl"))
+      changed = Observation()
       prop.join(maybeBc(parents), col("cluster_id") === col("p_id"), "left")
         .select(col("id"),
           coalesce(col("p_cl"), col("cluster_id")).as("cluster_id"),
           (col("chg") || coalesce(col("p_cl"), col("cluster_id")) < col("cluster_id")).as("chg"))
-    } { next =>
-      // the change flag rides in the staged table, so convergence is a
-      // scan of the just-materialized checkpoint, not a second join
-      next.where(col("chg")).count() == 0
+        .observe(changed, max(col("chg")).as("chg"))
+    } { _ =>
+      // max over an empty table is null: nothing left to change
+      changed.get("chg") != true
     }
     Checkpoints.free(labels0)
     Checkpoints.free(edges)
@@ -594,10 +596,11 @@ object Dedup {
     val tok = tokens(docs)
     val bands0 = bandKeys(tok)
     val bands = if (staged) Checkpoints.stage(bands0) else bands0
-    // A checkpointed LogicalRDD carries no stats (the pagerank lesson), so
-    // the planner would shuffle-join against the doc-sized band/mask
-    // blocks it previously auto-broadcast. Re-gate the hint on a measured
-    // count — above the gate the shuffle join is the correct plan anyway.
+    // A staged table keeps the estimated statistics of the plan it came
+    // from, and estimates through the token explode and band hashing can
+    // be far off, so the broadcast of the doc-sized band/mask blocks is
+    // gated on a measured count — above the gate the shuffle join is the
+    // correct plan anyway.
     val smallCorpus = staged && docs.count() < BroadcastDocs
     def maybeBc(df: DataFrame): DataFrame = if (smallCorpus) broadcast(df) else df
     val l = bands.select(col("doc_id").as("a_id"), col("band_i"), col("band_v"))

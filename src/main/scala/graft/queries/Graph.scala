@@ -101,7 +101,8 @@ object Graph {
     * The init projection over `deg` is never freed (Iterate leaves init to
     * the caller), so `deg`'s own checkpoint survives for later rounds. */
   private def pagerankBody(edges: DataFrame, deg: DataFrame, n: Long): DataFrame = {
-    // the staged rank/degree tables are NODE-sized but carry no stats
+    // the staged rank/degree tables are NODE-sized; broadcast them on the
+    // measured node count, not on estimates carried through the edge join
     val maybeBc = Checkpoints.broadcastGate(n)
     val init = deg.select(col("src").as("node"), lit(1.0 / n).as("rank"))
     val ranks = Iterate.rounds(init, 5) { (ranks, _) =>
@@ -462,8 +463,7 @@ object Graph {
     // after 5 rounds).
     "graph_pagerank" -> ((s, d) => {
       val edges = Checkpoints.stage(supplierPartEdges(s, d))
-      val deg = Checkpoints.stage(edges.groupBy("src").agg(count(lit(1)).as("deg")))
-      val n = deg.count()
+      val (deg, n) = Checkpoints.stageCounted(edges.groupBy("src").agg(count(lit(1)).as("deg")))
       val ranks = pagerankBody(edges, deg, n)
       Checkpoints.finishFreeing(ranks, edges, deg, ranks)
     }),
@@ -479,8 +479,7 @@ object Graph {
     // contribution-sum order drift, the graph_pagerank precedent.
     "graph_ppr" -> ((s, d) => {
       val edges = Checkpoints.stage(supplierPartEdges(s, d))
-      val deg = Checkpoints.stage(edges.groupBy("src").agg(count(lit(1)).as("deg")))
-      val n = deg.count()
+      val (deg, n) = Checkpoints.stageCounted(edges.groupBy("src").agg(count(lit(1)).as("deg")))
       val seeds = Checkpoints.stage(deg.select(col("src").as("node"))
         .withColumn("h", md5(concat(col("node"), lit("|ppr"))))
         .orderBy("h", "node").limit(5).select("node"))

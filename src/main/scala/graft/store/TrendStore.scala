@@ -41,8 +41,7 @@ final class TrendStore(
     * tracks batch days, not store size: at 100 TB a late one-day batch
     * rewrites one day. The affected-day list is batch-sized (collected to
     * drive static partition pruning of the base read), and the merge and
-    * rewrite are [[graft.ops.Upsert.overwriteDays]], which stages the
-    * merged frame before the overwrite.
+    * rewrite are [[graft.ops.Upsert.overwriteDays]].
     */
   def upsert(batch: DataFrame, granularity: String): Unit = {
     val missing = (keyCols ++ counters).filterNot(batch.columns.contains)

@@ -36,6 +36,13 @@ class FsSpec extends SparkSpec {
     assert(Fs.readUtf8(spark, f).contains("a:1"))
     Fs.writeUtf8(spark, f, "b:2")
     assert(Fs.readUtf8(spark, f).contains("b:2"))
+    assert(!new java.io.File(f + ".tmp").exists(), "the write must rename its temp file away")
+    // a directory in the file's place reads as no file and is replaced
+    val d = s"$root/legacy"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d, "sub"))
+    assert(Fs.readUtf8(spark, d).isEmpty)
+    Fs.writeUtf8(spark, d, "c:3")
+    assert(Fs.readUtf8(spark, d).contains("c:3"))
   }
 
   test("vacuum removes AGED _temporary trees and AGED orphans; spares fresh, committed, hidden (r11, hardened r12)") {

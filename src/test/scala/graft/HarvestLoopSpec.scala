@@ -1,11 +1,16 @@
 package graft
 
 import java.io.{File, PrintWriter}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.materialize.Materializer
 import graft.pipeline.HarvestLoop
 import graft.store.Triggers
 
@@ -34,6 +39,40 @@ class HarvestLoopSpec extends SparkSpec {
         .withColumn("bucket", date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH"))
     new HarvestLoop(spark, landing, work, reader, transform,
       Seq(Triggers.Rule("load_high", "kpi_load", "major")(_ > 150.0)))
+  }
+
+  /** Buckets in the materializer state of the loop working in `work`. */
+  private def stateBuckets(work: String): Int =
+    new Materializer(spark, s"$work/state").readState().size
+
+  /** Spark jobs that `body` starts on this thread. A marker job started
+    * after it is seen last on the listener bus, which delivers in order,
+    * so once the marker arrives every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"hl_jobs_${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => jobs.incrementAndGet()
+          case g if g == s"$group.end" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group.end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("tick ingests + materializes + notifies; rerun no-op; late data incremental") {
@@ -124,7 +163,7 @@ class HarvestLoopSpec extends SparkSpec {
     assert(spark.read.parquet(loop.derivedDir).select("bucket").distinct()
       .collect().map(_.getString(0)).toSeq == Seq("2024-01-01 12"))
     // state purged with them: bounded by the retention window
-    assert(spark.read.parquet(s"$work/state").count() == 1)
+    assert(stateBuckets(work) == 1)
     // the append-only event log is NOT expired
     assert(spark.read.parquet(loop.notificationsDir).count() == 2)
 
@@ -151,7 +190,6 @@ class HarvestLoopSpec extends SparkSpec {
   }
 
   test("crash between state delete and rename: full recompute of the retained buckets") {
-    import org.apache.commons.io.FileUtils
     val landing = tmpDir("hl_landing5")
     val work = tmpDir("hl_work5")
     writeCsv(landing, "f1.csv", Seq(
@@ -164,14 +202,14 @@ class HarvestLoopSpec extends SparkSpec {
     // the commit died after deleting `state`, leaving a finished state.tmp
     val state = new File(work, "state")
     val tmp = new File(work, "state.tmp")
-    FileUtils.copyDirectory(state, tmp)
-    FileUtils.deleteDirectory(state)
+    FileUtils.copyFile(state, tmp)
+    FileUtils.delete(state)
 
     val r = loop.tick(expireBefore = Some("2024-01-01 11"))
     assert(r.bucketsExpired == Seq("2024-01-01 10"), r.toString)
     assert(r.bucketsRecomputed == Seq("2024-01-01 11", "2024-01-01 12"), r.toString)
     assert(derivedEqualsTransform(loop, work))
-    assert(spark.read.parquet(state.toString).count() == 2)
+    assert(stateBuckets(work) == 2)
     assert(!tmp.exists(), "the commit must consume state.tmp")
     assert(loop.tick(expireBefore = Some("2024-01-01 11")).isNoOp)
   }
@@ -184,11 +222,11 @@ class HarvestLoopSpec extends SparkSpec {
       "2,2024-01-01 11:05:00,20.0"))
     val loop = mkLoop(landing, work)
     loop.tick()
-    assert(spark.read.parquet(s"$work/state").count() == 2)
+    assert(stateBuckets(work) == 2)
 
     val r = loop.tick(expireBefore = Some("2024-01-02 00"))
     assert(r.bucketsExpired == Seq("2024-01-01 10", "2024-01-01 11"), r.toString)
-    assert(spark.read.parquet(s"$work/state").count() == 0)
+    assert(stateBuckets(work) == 0)
     assert(loop.tick(expireBefore = Some("2024-01-02 00")).isNoOp)
   }
 
@@ -204,6 +242,70 @@ class HarvestLoopSpec extends SparkSpec {
     Thread.sleep(20) // a rewrite would move mtimes
     assert(loop.tick(expireBefore = Some("2024-01-01 10")).isNoOp)
     assert(snapshot(work) == before)
+  }
+
+  test("a steady tick runs at most 4 Spark jobs and a no-op tick runs none") {
+    val landing = tmpDir("hl_landing9")
+    val work = tmpDir("hl_work9")
+    writeCsv(landing, "f1.csv", Seq(
+      "1,2024-01-01 10:05:00,200.0",
+      "2,2024-01-01 11:05:00,20.0"))
+    val loop = mkLoop(landing, work)
+    loop.tick()
+
+    writeCsv(landing, "f2.csv", Seq("3,2024-01-01 11:15:00,300.0"))
+    var r: HarvestLoop.TickReport = null
+    val steady = jobsOf { r = loop.tick() }
+    assert(r.bucketsRecomputed == Seq("2024-01-01 11") && r.notificationsRaised == 1L, r.toString)
+    // raw write, recompute shuffle + write, notification write
+    assert(steady <= 4, s"steady tick ran $steady jobs")
+    val noop = jobsOf { r = loop.tick() }
+    assert(r.isNoOp, r.toString)
+    assert(noop == 0, s"no-op tick ran $noop jobs")
+  }
+
+  test("a bucket whose raw file set changed is recomputed; an untouched one is not") {
+    val landing = tmpDir("hl_landing10")
+    val work = tmpDir("hl_work10")
+    writeCsv(landing, "f1.csv", Seq(
+      "1,2024-01-01 10:05:00,200.0",
+      "2,2024-01-01 11:05:00,20.0"))
+    val loop = mkLoop(landing, work)
+    loop.tick()
+    val derivedBefore = spark.read.parquet(loop.derivedDir).collect().toSet
+
+    // rewrite the 10h bucket's one file under a new name: same rows, new file set
+    val bucketDir = new File(work, "raw/bucket=2024-01-01 10")
+    val Array(part) = bucketDir.listFiles().filter(_.getName.startsWith("part-"))
+    FileUtils.moveFile(part, new File(bucketDir, "part-renamed.snappy.parquet"))
+    new File(bucketDir, s".${part.getName}.crc").delete()
+
+    val r = loop.tick()
+    assert(r.filesIngested.isEmpty && r.bucketsRecomputed == Seq("2024-01-01 10"), r.toString)
+    assert(spark.read.parquet(loop.derivedDir).collect().toSet == derivedBefore)
+    assert(loop.tick().isNoOp)
+  }
+
+  test("a parquet ingest log is converted once, never re-ingested") {
+    import org.apache.spark.sql.SaveMode
+    val landing = tmpDir("hl_landing11")
+    val work = tmpDir("hl_work11")
+    writeCsv(landing, "f1.csv", Seq("1,2024-01-01 10:05:00,200.0"))
+    val loop = mkLoop(landing, work)
+    loop.tick()
+
+    // the log as a parquet directory of file paths, as it was written
+    // before it became a control file
+    val log = new File(work, "ingest_log")
+    val logged = Fs.readUtf8(spark, log.toString).get.split("\n").toSeq
+    FileUtils.delete(log)
+    spark.createDataFrame(logged.map(Tuple1(_))).toDF("file")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(log.toString)
+
+    assert(loop.tick().isNoOp)
+    assert(log.isFile)
+    assert(Fs.readUtf8(spark, log.toString).get.split("\n").toSeq == logged)
+    assert(spark.read.parquet(s"$work/raw").count() == 1)
   }
 
   test("a tick that raises no notification adds no file to the notification store") {

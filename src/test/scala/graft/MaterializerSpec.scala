@@ -67,25 +67,54 @@ class MaterializerSpec extends SparkSpec {
     assert(a.unionByName(b.select(a.columns.map(col): _*)).distinct().count() == b.count())
   }
 
-  test("pre-fp_sum state (older schema) degrades to recompute, not a crash") {
+  /** Replaces the state of a finished pass with `legacy` written as the
+    * parquet directory the state was before it became a control file:
+    * the next pass must recompute every bucket, replace the directory,
+    * and leave the pass after it a no-op. */
+  private def legacyStateDegrades(tag: String)(legacy: DataFrame => DataFrame): Unit = {
     val src = bucketed(Tables.events(spark, sf0001))
-    val state = tmpDir("mat_state_mig")
-    val target = tmpDir("mat_target_mig")
+    val state = tmpDir(s"mat_state_$tag") + "/state"
+    val target = tmpDir(s"mat_target_$tag")
     val m = new Materializer(spark, state)
     m.materialize(src, transform, target)
 
-    // simulate state written by the pre-fp_sum version of the fingerprint
-    val old = spark.read.parquet(state).drop("fp_sum")
-    val tmp = state + ".old"
-    old.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    spark.read.parquet(tmp).coalesce(1).write.mode(SaveMode.Overwrite).parquet(state)
+    new java.io.File(state).delete()
+    val h = xxhash64(src.columns.filter(_ != "bucket").sorted.map(col): _*)
+    legacy(src.withColumn("h", h)).coalesce(1).write.mode(SaveMode.Overwrite).parquet(state)
 
-    // the missing column must surface as NULL -> every bucket compares
-    // stale (null-safe) -> one-time full recompute; next run is a no-op
     val r = m.materialize(src, transform, target)
     assert(r.nRecomputed.toLong == src.select("bucket").distinct().count())
+    assert(new java.io.File(state).isFile, "the commit must replace the directory")
     val r2 = m.materialize(src, transform, target)
-    assert(r2.nRecomputed == 0, s"state not re-upgraded: ${r2.recomputedBuckets}")
+    assert(r2.nRecomputed == 0, s"state not rewritten: ${r2.recomputedBuckets}")
+  }
+
+  test("pre-fp_sum state (older schema) degrades to recompute, not a crash") {
+    legacyStateDegrades("mig")(_.groupBy("bucket")
+      .agg(count(lit(1)).as("fp_count"), bit_xor(col("h")).as("fp_hash")))
+  }
+
+  test("a legacy parquet state directory degrades to one full recompute, then a no-op") {
+    legacyStateDegrades("parquet")(_.groupBy("bucket")
+      .agg(count(lit(1)).as("fp_count"), bit_xor(col("h")).as("fp_hash"),
+        sum(col("h").cast("decimal(38,0)")).as("fp_sum")))
+  }
+
+  test("file fingerprints key buckets by their unescaped value and follow the file set") {
+    val dir = tmpDir("mat_files")
+    val rows = spark.range(4).select(
+      when(col("id") < 2, lit("h:10 %")).otherwise(lit("b/2")).as("bucket"),
+      col("id"))
+    rows.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(dir)
+    val fp0 = Materializer.fileFingerprints(spark.read.parquet(dir))
+    assert(fp0.keySet == Set("h:10 %", "b/2"))
+    assert(spark.read.parquet(dir).select("bucket").distinct()
+      .collect().map(_.getString(0)).toSet == fp0.keySet)
+
+    rows.where(col("id") === 0).write.mode(SaveMode.Append).partitionBy("bucket").parquet(dir)
+    val fp1 = Materializer.fileFingerprints(spark.read.parquet(dir))
+    assert(fp1("h:10 %") != fp0("h:10 %"))
+    assert(fp1("b/2") == fp0("b/2"))
   }
 
   test("retention cut drops older buckets from the state in the pass's one commit") {
@@ -100,12 +129,11 @@ class MaterializerSpec extends SparkSpec {
     val cut = buckets(1)
     val r = m.materialize(src, transform, target, retainFrom = Some(cut))
     assert(r.nRecomputed == 0, s"the cut alone recomputed ${r.recomputedBuckets}")
-    assert(spark.read.parquet(state).select("bucket").collect().map(_.getString(0))
-      .sorted.toSeq == buckets.tail)
+    assert(m.readState().keys.toSeq.sorted == buckets.tail)
     assert(!new java.io.File(state + ".tmp").exists(), "the commit must consume state.tmp")
     // a bucket below the cut is never rematerialized, so the state stays cut
     assert(m.materialize(src, transform, target, retainFrom = Some(cut)).nRecomputed == 0)
-    assert(spark.read.parquet(state).count() == buckets.size - 1)
+    assert(m.readState().size == buckets.size - 1)
   }
 
   test("stability delay keeps hot buckets unmaterialized") {

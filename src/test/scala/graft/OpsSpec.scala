@@ -64,6 +64,21 @@ class OpsSpec extends SparkSpec {
       "free must drop the RDD from the persistence registry without waiting for GC")
   }
 
+  test("stageCounted counts through the staging job; a small stage keeps a finite size estimate") {
+    def third = spark.range(1000).toDF("id").where(col("id") % 3 === 0)
+    val (staged, n) = Checkpoints.stageCounted(third)
+    assert(n == 334L && staged.count() == 334L)
+    assert(checkpointIds(staged).size == 1)
+    // the staged leaf carries the origin plan's estimate, not the
+    // planner's "unknown" default, so the planner may broadcast it
+    val size = staged.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size < spark.sessionState.conf.autoBroadcastJoinThreshold, s"staged estimate $size")
+    Checkpoints.free(staged)
+
+    val (lazyPlan, m) = Checkpoints.auditLazily(Checkpoints.stageCounted(third))
+    assert(m == 334L && checkpointIds(lazyPlan).isEmpty)
+  }
+
   test("Iterate.rounds leaves only the caller's init and the returned stage persisted") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val init = spark.range(100).toDF("id").localCheckpoint(true)
