@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions.{broadcast, count, lit}
 
 /** The one staging path, and deterministic reclamation of what it stages.
   *
-  * Every staged intermediate goes through [[stage]]: outside
-  * [[auditLazily]] that is `df.localCheckpoint(true)`, inside it the plan
-  * stays lazy, so the plan audits read each key's own registry route.
-  * HarnessSpec pins, with a source scan, that no other file under
-  * `src/main` calls `localCheckpoint`.
+  * Every staged intermediate goes through [[stage]], which is
+  * `df.localCheckpoint(true)`: its own execution, which the plan audits
+  * record (`graft.tools.PlanScan.executedPlans`). HarnessSpec pins, with a
+  * source scan, that no other file under `src/main` calls `localCheckpoint`.
   *
   * A local checkpoint's blocks are reclaimed only when the JVM
   * garbage-collects the RDD (the ContextCleaner hook). Per-round stages in
@@ -34,7 +33,7 @@ object Checkpoints {
     * localCheckpoint truncates lineage — turn any premature free into a
     * hard read failure later, not a recompute. Call [[freeAll]] when
     * releasing every checkpoint under a composite plan is what you mean. */
-  def free(df: DataFrame): Unit = if (!auditing) {
+  def free(df: DataFrame): Unit = {
     val leaves = checkpointLeaves(df)
     require(leaves.length == 1,
       s"Checkpoints.free expects exactly one LogicalRDD leaf, found ${leaves.length}; " +
@@ -46,7 +45,7 @@ object Checkpoints {
     * for composite plans (joins/unions of checkpoints). Safe only once
     * nothing will read any of them again. */
   def freeAll(df: DataFrame): Unit =
-    if (!auditing) checkpointLeaves(df).foreach(_.unpersist(blocking = false))
+    checkpointLeaves(df).foreach(_.unpersist(blocking = false))
 
   /** Materialize `result` as its own checkpoint, then free every
     * checkpoint under each `spent` plan — the standard finish for an
@@ -61,22 +60,16 @@ object Checkpoints {
   }
 
   /** Materialize `df` as a `localCheckpoint` (eager: the job runs here)
-    * and return the lineage-free frame over its blocks. Inside
-    * [[auditLazily]] it returns `df` unexecuted instead. */
-  def stage(df: DataFrame): DataFrame =
-    if (auditing) df else df.localCheckpoint(true)
+    * and return the lineage-free frame over its blocks. */
+  def stage(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** [[stage]] and the staged row count. The count is an `Observation`
-    * on the staging job itself, so it costs no job of its own. Inside
-    * [[auditLazily]] the stage never runs (the observation would never
-    * fire), so the count is a plain `count()` there. */
-  def stageCounted(df: DataFrame): (DataFrame, Long) =
-    if (auditing) (df, df.count())
-    else {
-      val rows = Observation()
-      val staged = stage(df.observe(rows, count(lit(1)).as("n")))
-      (staged, rows.get("n").asInstanceOf[Long])
-    }
+    * on the staging job itself, so it costs no job of its own. */
+  def stageCounted(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val staged = stage(df.observe(rows, count(lit(1)).as("n")))
+    (staged, rows.get("n").asInstanceOf[Long])
+  }
 
   /** Row count under which [[broadcastGate]] broadcasts a table. */
   val BroadcastNodes = 5000000L
@@ -89,22 +82,6 @@ object Checkpoints {
     * decides from a measured count instead. */
   def broadcastGate(rows: Long): DataFrame => DataFrame =
     df => if (rows < BroadcastNodes) broadcast(df) else df
-
-  /** Runs `body` with staging turned into plan composition: [[stage]]
-    * returns its input lazily, [[free]]/[[freeAll]] do nothing, and
-    * [[Iterate.untilFixpoint]] fails (its round count depends on the
-    * data). An operator that stages only through this object therefore
-    * returns, from its own registry route, the whole lazy plan it would
-    * have executed — which is how the plan audits (graft.tools.PlanScan,
-    * PlanDump, PlanShapeSpec) inspect keys whose route executes eagerly.
-    * Only scalar driver reads (counts, argmaxes) still run. Scoped to the
-    * calling thread and the threads it starts. */
-  def auditLazily[A](body: => A): A = lazyAudit.withValue(true)(body)
-
-  /** True inside [[auditLazily]]. */
-  private[ops] def auditing: Boolean = lazyAudit.value
-
-  private val lazyAudit = new scala.util.DynamicVariable[Boolean](false)
 
   private def checkpointLeaves(df: DataFrame) =
     df.queryExecution.analyzed.collect {

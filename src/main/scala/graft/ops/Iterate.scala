@@ -20,8 +20,8 @@ import org.apache.spark.sql.DataFrame
   *
   * `step` gets the current state and the 1-based round number. Rounds
   * run in order, so fold order and round counts are exactly the loop's.
-  * Inside [[Checkpoints.auditLazily]] staging is lazy and frees do
-  * nothing, so [[rounds]] returns the unrolled plan. */
+  * Each round's stage is its own execution, one round deep, as the plan
+  * audits record it (`graft.tools.PlanScan.executedPlans`). */
 object Iterate {
   /** `n` fixed rounds of `step` from `init`. */
   def rounds(init: DataFrame, n: Int)(step: (DataFrame, Int) => DataFrame): DataFrame = {
@@ -38,13 +38,9 @@ object Iterate {
   /** Rounds of `step` from `init` until `done` holds for a round's staged
     * result, or `cap` rounds have run; returns that round's stage. `done`
     * sees only the new stage (callers carry any scalar they compare
-    * against, e.g. the previous round's count). A fixpoint loop has no
-    * static plan, so it refuses to run inside
-    * [[Checkpoints.auditLazily]]. */
+    * against, e.g. the previous round's count). */
   def untilFixpoint(init: DataFrame, cap: Int)(step: (DataFrame, Int) => DataFrame)(
       done: DataFrame => Boolean): DataFrame = {
-    require(!Checkpoints.auditing,
-      "Iterate.untilFixpoint has no lazy plan: its round count depends on the data")
     require(cap >= 1, s"Iterate.untilFixpoint needs a cap of at least one round, got $cap")
     var cur = init
     var i = 0

@@ -32,11 +32,11 @@ import org.apache.spark.sql.functions._
   * part) and is reclaimed by the context cleaner once the caller drops it.
   *
   * Every stage goes through [[graft.ops.Checkpoints.stage]] and every
-  * per-round loop through [[graft.ops.Iterate]], so running a key's
-  * registry route inside [[graft.ops.Checkpoints.auditLazily]] returns
-  * the full lazy composition it would execute — the plan the audits
-  * (graft.tools.PlanScan, PlanShapeSpec) judge. Keys with a fixpoint loop
-  * (`graph_kcore`, `graph_cc`) have no such plan and refuse to run there.
+  * per-round loop through [[graft.ops.Iterate]]. The plan audits
+  * (graft.tools.PlanScan, PlanDump, PlanShapeSpec) judge a graph key by
+  * every plan its registry route executed — each stage, each driver read
+  * and the returned frame — as recorded by
+  * [[graft.tools.PlanScan.executedPlans]].
   */
 object Graph {
   type Q = (SparkSession, String) => DataFrame

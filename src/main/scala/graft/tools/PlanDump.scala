@@ -1,20 +1,16 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainUtils
 
-import graft.SparkEntry
-
-/** Write `.explain("formatted")` output for named query keys to files —
+/** Write the formatted physical plans of named query keys to files —
   * the optimization-round evidence artifact (plans/r12/<key>_<tag>.txt).
-  * Usage: `sbt "runMain graft.tools.PlanDump <outDir> <tag> <key>[,<key>...]"`.
+  * Usage: `sbt "runMain graft.tools.PlanDump <outDir> <tag> <key>[,<key>...] [sfDir]"`.
   *
-  * Keys whose registry route executes eagerly (graph family / staged
-  * dedup tables) are dumped through [[PlanScan.auditOverrides]] — the
-  * key's own route run lazily under `Checkpoints.auditLazily`, the same
-  * plan PlanShapeSpec judges — because the registry route's returned
-  * frame is a LogicalRDD scan whose formatted plan would be vacuous.
-  * Streaming keys have no batch plan (IncrementalExecution) and are
-  * skipped with a stub note. */
+  * Each key's file holds every plan the key executed, in order
+  * ([[PlanScan.executedPlans]]), each under a header naming the action
+  * that ran it. Streaming keys have no batch plan (IncrementalExecution)
+  * and are skipped with a stub note. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
@@ -28,17 +24,18 @@ object PlanDump {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    val overrides = PlanScan.auditOverrides
     keys.foreach { k =>
       val body =
         if (graft.streaming.Streams.queries.contains(k))
           s"(streaming key $k: per-micro-batch IncrementalExecution plan; " +
             "batch-equivalence and state shape asserted in StreamingSpec)"
         else {
-          val fn = overrides.getOrElse(k, SparkEntry.queries(k))
-          val df = fn(spark, sfDir)
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val plans = PlanScan.executedPlans(spark, k, sfDir)
+          plans.zipWithIndex.map { case ((action, plan), i) =>
+            val text = new StringBuilder
+            ExplainUtils.processPlan(plan, text.append(_: String))
+            s"== ${i + 1}/${plans.size}: $action ==\n$text"
+          }.mkString("\n")
         }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$outDir/${k}_$tag.txt"),

@@ -1,14 +1,18 @@
 package graft.tools
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkEntry
-import graft.ops.Checkpoints
 
 /** Plan auditor: prints, for every declared query, the physical-plan
   * features that matter at 100 TB — shuffle (Exchange) count, join
   * strategies, pushed filters, and scale red flags (CartesianProduct,
-  * unpruned scans). Run with `sbt "runMain graft.tools.PlanScan [sfDir]"`.
+  * unpruned scans), summed over every plan the query executed
+  * ([[executedPlans]]). Run with `sbt "runMain graft.tools.PlanScan [sfDir]"`.
   *
   * Streaming keys are skipped: their plans are per-micro-batch
   * (IncrementalExecution) and are asserted in StreamingSpec instead. */
@@ -17,40 +21,54 @@ object PlanScan {
     * (derived from Streams.queries so the set cannot drift as keys are
     * added — the r4 VERDICT caught four drained-by-accident strays), plus
     * side-effecting scans/sinks whose cost is the layout write, asserted
-    * in their own specs instead, plus the graph keys with no auditable
-    * lazy plan: `graph_cc` and `graph_kcore` run fixpoint loops
-    * (pointer-jump rounds / peel with early exit) whose round count
-    * depends on the data, so [[graft.ops.Iterate.untilFixpoint]] refuses
-    * to run under [[graft.ops.Checkpoints.auditLazily]]; `graph_bfs_levels`,
-    * `graph_closeness` and `graph_betweenness` read their per-round table
-    * twice per round, so the lazy 8-round unroll doubles the plan per
-    * round (2^8 subtrees). Their per-round join shapes are covered by
-    * GraphSpec/DedupSpec. Every other graph key IS audited — see
-    * [[auditOverrides]]. */
+    * in their own specs instead. */
   val skipKeys: Set[String] =
     graft.streaming.Streams.queries.keySet ++ Set(
       "scan_csv_typed", "scan_csv_malformed", "scan_jsonl", "scan_xml_typed",
-      "sink_partitioned", "join_bucketed", "scan_binary", "graph_cc",
-      "graph_bfs_levels", "graph_kcore", "graph_closeness",
-      "graph_betweenness", // eager 16-round BFS+Brandes loop (closeness)
-      "geo_dbscan_label") // pointer-jump loop executes eagerly (graph_cc)
+      "sink_partitioned", "join_bucketed", "scan_binary")
 
-  /** How the audits read a key whose registry route executes eagerly
-    * (checkpoint hygiene) and would otherwise show only a LogicalRDD scan:
-    * every non-skipped graph key plus the two staged dedup keys
-    * (`llm_dedup_lsh_verified`, `llm_dedup_minhash`) run their own
-    * registry route inside [[graft.ops.Checkpoints.auditLazily]], where
-    * staging and the per-round loops compose the plan instead of
-    * executing it — the audited plan is the shipped plan by construction.
-    * Not every key: lazily unrolled loop keys explode (`llm_hnsw_search`
-    * 0 → 2559 exchanges). Shared by this audit, PlanDump and PlanShapeSpec
-    * so they can't disagree about which plan a key is judged on. */
-  def auditOverrides: Map[String, (SparkSession, String) => DataFrame] =
-    (graft.queries.Graph.queries.keySet -- skipKeys +
-      "llm_dedup_lsh_verified" + "llm_dedup_minhash").map { k =>
-      val q = SparkEntry.queries(k)
-      k -> ((s: SparkSession, d: String) => Checkpoints.auditLazily(q(s, d)))
-    }.toMap
+  /** Every execution `query` ran, in order, as (action name, executed
+    * plan): each `localCheckpoint` stage, each driver read (`count`,
+    * `head`, an `Observation`'s action, ...) and, last, the returned frame
+    * itself, run here to completion as the one execution named `foreach`
+    * (Spark's own `Dataset.foreach` reports `foreachPartition`). Recorded
+    * with adaptive execution off, so every plan is the static physical
+    * plan (an executed adaptive plan prints its final and its initial
+    * plan, which would count every operator twice).
+    *
+    * The listener bus delivers asynchronously but in order, so once the
+    * final action's own callback has arrived (waited for, up to two
+    * minutes) every earlier execution has been seen. */
+  def executedPlans(spark: SparkSession)(query: => DataFrame): Seq[(String, SparkPlan)] = {
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val lastSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, durationNs: Long): Unit = saw(name, qe)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = saw(name, qe)
+      private def saw(name: String, qe: QueryExecution): Unit = {
+        runs.add(name -> qe)
+        if (name == "foreach") lastSeen.countDown()
+      }
+    }
+    val aqe = "spark.sql.adaptive.enabled"
+    val aqeBefore = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    spark.listenerManager.register(listener)
+    try {
+      val qe = query.queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("foreach"))(qe.toRdd.foreach(_ => ()))
+      if (!lastSeen.await(120, java.util.concurrent.TimeUnit.SECONDS))
+        throw new IllegalStateException("the final action's listener callback never arrived")
+      runs.asScala.toSeq.map { case (name, q) => name -> q.executedPlan }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      aqeBefore.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    }
+  }
+
+  /** [[executedPlans]] of registry key `key` over the tables in `sfDir`. */
+  def executedPlans(spark: SparkSession, key: String, sfDir: String): Seq[(String, SparkPlan)] =
+    executedPlans(spark)(SparkEntry.queries(key)(spark, sfDir))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -63,14 +81,10 @@ object PlanScan {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val skip = PlanScan.skipKeys
     var flags = 0
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn0) =>
-      if (!skip.contains(name)) {
-        // eager routes are audited through their lazy plan, not a
-        // vacuous LogicalRDD scan
-        val fn = auditOverrides.getOrElse(name, fn0)
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      if (!skipKeys.contains(name)) {
+        val plan = executedPlans(spark, name, sfDir).map(_._2.toString).mkString("\n")
         def n(p: String) = p.r.findAllIn(plan).size
         val cartesian = n("CartesianProduct")
         val bnl = n("BroadcastNestedLoopJoin")

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
@@ -17,9 +19,36 @@ import graft.SparkEntry
   * near-dup pairs out (the STRESS mode deliberately multiplies pair
   * volume 40×+ — a different experiment, measured separately in r4).
   *
+  * A throwing key prints `[scalefull] <key> failed: <msg>` to stderr.
+  *
   * Run: `sbt "runMain graft.tools.ScaleFull [outPath]"` (30-60 min).
   */
 object ScaleFull {
+  /** `SCALE_full.json` from the per-key seconds at sf0.1 (`base`) and at
+    * the 10× corpus (`big`). A key in `failed` threw: its seconds are the
+    * time to the failure, so its row carries no growth factor. */
+  def render(base: Map[String, Double], big: Map[String, Double],
+             failed: Set[String]): String = {
+    def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    val keys = base.keys.toSeq.sorted
+    val body = keys.map { k =>
+      val growth = if (failed(k)) "" else
+        s""", "growth": ${f(if (base(k) > 0.0) big(k) / base(k) else -1.0)}"""
+      s"""  "$k": {"sf01_sec": ${f(base(k))}, "x10_sec": ${f(big(k))}$growth}"""
+    }.mkString(",\n")
+    val failedJson = failed.toSeq.sorted.map(k => s""""$k"""").mkString("[", ", ", "]")
+    s"""{
+       |  "_method": "clean 10x derived corpus vs sf0.1, same session; batch keys warm (min-of-2), streaming median-of-3",
+       |  "_data_growth": 10.0,
+       |  "_keys": ${keys.size},
+       |  "_total_sf01_sec": ${f(base.values.sum)},
+       |  "_total_x10_sec": ${f(big.values.sum)},
+       |  "_failed": $failedJson,
+       |$body
+       |}
+       |""".stripMargin
+  }
+
   def main(args: Array[String]): Unit = {
     val outPath = args.headOption.getOrElse("SCALE_full.json")
     val src = "/root/testdata/sf0.1"
@@ -38,6 +67,7 @@ object ScaleFull {
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$src/region.parquet").count()
 
+    val failed = scala.collection.mutable.Set.empty[String]
     def timeAll(dir: String): Map[String, Double] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         // batch keys: 2 reps, keep the WARM one (min) — the r4 run's
@@ -55,9 +85,10 @@ object ScaleFull {
           // count plan has no Window node), which would report flat
           // "growth" for work that was never executed. foreach forces
           // every operator and materializes every output column.
-          try { fn(spark, dir).foreach(_ => ()) }
-          catch { case e: Throwable =>
-            println(s"[scalefull] $name FAILED at $dir: ${e.getMessage}") }
+          try fn(spark, dir).foreach(_ => ())
+          catch { case NonFatal(e) =>
+            System.err.println(s"[scalefull] $name failed: ${e.getMessage}")
+            failed += name }
           val t = (System.nanoTime() - t0) / 1e9
           // same untimed dead-block sweep as Bench (r12): leaked
           // checkpoint blocks from earlier keys otherwise land full-GC
@@ -74,24 +105,8 @@ object ScaleFull {
     val base = timeAll(src)
     val big = timeAll(x10)
 
-    def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val keys = SparkEntry.queries.keys.toSeq.sorted
-    val body = keys.map { k =>
-      val g = if (base(k) > 0.0) big(k) / base(k) else -1.0
-      s"""  "$k": {"sf01_sec": ${f(base(k))}, "x10_sec": ${f(big(k))}, "growth": ${f(g)}}"""
-    }.mkString(",\n")
-    val json =
-      s"""{
-         |  "_method": "clean 10x derived corpus vs sf0.1, same session; batch keys warm (min-of-2), streaming median-of-3",
-         |  "_data_growth": 10.0,
-         |  "_keys": ${keys.size},
-         |  "_total_sf01_sec": ${f(base.values.sum)},
-         |  "_total_x10_sec": ${f(big.values.sum)},
-         |$body
-         |}
-         |""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      render(base, big, failed.toSet).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"[scalefull] wrote $outPath")
     spark.stop()
   }

@@ -40,4 +40,19 @@ class BenchLineSpec extends AnyFunSuite {
       assert(clean.contains(""""_failed": [],"""), clean)
     } finally java.nio.file.Files.deleteIfExists(path)
   }
+
+  test("SCALE_full lists failed keys under _failed, with no growth factor") {
+    val json = graft.tools.ScaleFull.render(
+      Map("b" -> 2.0, "a" -> 0.5, "c" -> 0.25), Map("b" -> 10.0, "a" -> 6.0, "c" -> 0.5),
+      Set("c", "a"))
+    assert(json.contains(""""_failed": ["a", "c"],"""), json)
+    assert(json.contains(""""_keys": 3,"""), json)
+    assert(json.contains(""""_total_sf01_sec": 2.750,"""), json)
+    assert(json.contains(""""a": {"sf01_sec": 0.500, "x10_sec": 6.000},"""), json)
+    assert(json.contains(""""b": {"sf01_sec": 2.000, "x10_sec": 10.000, "growth": 5.000},"""), json)
+    assert(json.contains(""""c": {"sf01_sec": 0.250, "x10_sec": 0.500}"""), json)
+    val clean = graft.tools.ScaleFull.render(Map("a" -> 1.0), Map("a" -> 3.0), Set.empty)
+    assert(clean.contains(""""_failed": [],"""), clean)
+    assert(clean.contains(""""a": {"sf01_sec": 1.000, "x10_sec": 3.000, "growth": 3.000}"""), clean)
+  }
 }

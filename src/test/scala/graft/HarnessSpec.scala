@@ -63,19 +63,12 @@ class HarnessSpec extends SparkSpec {
     // stream audits the meaningless post-drain local read — r4 VERDICT)
     assert((streaming -- graft.tools.PlanScan.skipKeys).isEmpty,
       s"streaming keys PlanScan would drain: ${streaming -- graft.tools.PlanScan.skipKeys}")
-    // the only non-streaming skips are the documented side-effect keys
-    // plus the graph keys with no auditable lazy plan: graph_cc and
-    // graph_kcore loop to a data-dependent fixpoint; graph_bfs_levels,
-    // graph_closeness and graph_betweenness read their per-round table
-    // twice per round, so a lazy 8-round unroll doubles the plan per
-    // round (2^8 subtrees). The other graph keys are audited through
-    // their own registry route under Checkpoints.auditLazily — see
-    // PlanScan.skipKeys' doc
+    // the only non-streaming skips are the documented side-effect keys;
+    // every other key, staged ones included, is audited by the plans it
+    // executed (PlanScan.executedPlans)
     val sideEffect = graft.tools.PlanScan.skipKeys -- streaming
     assert(sideEffect == Set("scan_csv_typed", "scan_csv_malformed", "scan_jsonl",
-      "scan_xml_typed", "sink_partitioned", "join_bucketed", "scan_binary",
-      "graph_cc", "graph_bfs_levels", "graph_kcore", "graph_closeness",
-      "graph_betweenness", "geo_dbscan_label"),
+      "scan_xml_typed", "sink_partitioned", "join_bucketed", "scan_binary"),
       s"unexpected non-streaming PlanScan skips: $sideEffect")
   }
 
@@ -111,8 +104,9 @@ class HarnessSpec extends SparkSpec {
   }
 
   test("every localCheckpoint goes through Checkpoints.stage") {
-    // Checkpoints.stage is the one staging path, so auditLazily sees every
-    // stage. `\.localCheckpoint\b` also catches the paren-less call form.
+    // Checkpoints.stage is the one staging path, so every stage is a
+    // `localCheckpoint` execution the plan audits record. `\.localCheckpoint\b`
+    // also catches the paren-less call form.
     val offenders = mainSourcesCalling("""\.localCheckpoint\b""".r)
     assert(offenders == Set("Checkpoints.scala"), offenders)
   }

@@ -74,9 +74,6 @@ class OpsSpec extends SparkSpec {
     val size = staged.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(size < spark.sessionState.conf.autoBroadcastJoinThreshold, s"staged estimate $size")
     Checkpoints.free(staged)
-
-    val (lazyPlan, m) = Checkpoints.auditLazily(Checkpoints.stageCounted(third))
-    assert(m == 334L && checkpointIds(lazyPlan).isEmpty)
   }
 
   test("Iterate.rounds leaves only the caller's init and the returned stage persisted") {
@@ -117,29 +114,38 @@ class OpsSpec extends SparkSpec {
     Seq(init, hit, last).foreach(Checkpoints.free)
   }
 
-  test("inside auditLazily graph keys return their lazy plan and persist nothing; fixpoints refuse") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Seq("graph_pagerank", "graph_katz",
-        "llm_dedup_lsh_verified", "llm_dedup_minhash").foreach { k =>
-      val audited = Checkpoints.auditLazily(SparkEntry.queries(k)(spark, sf0001))
-      assert(checkpointIds(audited).isEmpty, s"$k: audited plan still reads a checkpoint")
-      assert(spark.sparkContext.getPersistentRDDs.keySet -- before == Set.empty,
-        s"$k: the audit persisted blocks")
-      // the audited plan is the shipped plan: it computes the same answer
-      val shipped = SparkEntry.queries(k)(spark, sf0001)
-      assert(audited.collect().toSeq == shipped.collect().toSeq, k)
-      Checkpoints.freeAll(shipped)
+  test("Iterate.untilFixpoint records one stage per round, then the final action") {
+    val init = spark.range(10).toDF("id").localCheckpoint(true)
+    var out: org.apache.spark.sql.DataFrame = null
+    val plans = graft.tools.PlanScan.executedPlans(spark) {
+      out = Iterate.untilFixpoint(init, 10) { (cur, _) =>
+        cur.select((col("id") + 1).as("id"))
+      } (next => next.agg(max("id")).head().getLong(0) >= 12)
+      out
     }
-    val msg = "Iterate.untilFixpoint has no lazy plan"
-    val e1 = intercept[IllegalArgumentException] {
-      Checkpoints.auditLazily(
-        Iterate.untilFixpoint(spark.range(3).toDF("id"), 4)((d, _) => d)(_ => true))
+    // each round: its staging job, then the done check's driver read
+    assert(plans.map(_._1) ==
+      Seq.fill(3)(Seq("localCheckpoint", "head")).flatten :+ "foreach", plans.map(_._1))
+    // a staged round reads its predecessor's blocks: one round deep
+    plans.filter(_._1 == "localCheckpoint").foreach { case (_, p) =>
+      assert("Scan ExistingRDD".r.findAllIn(p.toString).size == 1, p)
     }
-    assert(e1.getMessage.contains(msg))
-    val e2 = intercept[IllegalArgumentException] {
-      Checkpoints.auditLazily(SparkEntry.queries("graph_kcore")(spark, sf0001))
-    }
-    assert(e2.getMessage.contains(msg))
+    Seq(init, out).foreach(Checkpoints.free)
+  }
+
+  test("recorded plans of staged keys include a stage and the source scan") {
+    // each of these keys returns a frame over staged blocks; only the
+    // plans it executed on the way show the parquet scan of its source
+    Seq("graph_pagerank" -> "lineitem", "graph_kcore" -> "lineitem",
+        "llm_dedup_lsh_verified" -> "documents", "llm_dedup_minhash" -> "documents")
+      .foreach { case (k, table) =>
+        val plans = graft.tools.PlanScan.executedPlans(spark, k, sf0001)
+        assert(plans.last._1 == "foreach", s"$k: ${plans.map(_._1)}")
+        assert(plans.exists(_._1 == "localCheckpoint"), s"$k: no stage in ${plans.map(_._1)}")
+        val scan = s"FileScan parquet .*$table\\.parquet".r
+        assert(plans.exists(p => scan.findFirstIn(p._2.toString).isDefined),
+          s"$k: no parquet scan of $table in ${plans.size} recorded plans")
+      }
   }
 
   test("distributed global rank equals the single-partition window, incl. ntile") {

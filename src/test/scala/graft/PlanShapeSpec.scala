@@ -9,6 +9,12 @@ class PlanShapeSpec extends SparkSpec {
   private def planOf(key: String): String =
     SparkEntry.queries(key)(spark, sf0001).queryExecution.executedPlan.toString
 
+  /** The partition-less `WindowExec`s over all of `plans`. */
+  private def partitionlessWindows(plans: Seq[(String, org.apache.spark.sql.execution.SparkPlan)]) =
+    plans.flatMap(_._2.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec if w.partitionSpec.isEmpty => w
+    })
+
   test("filter_pred pushes predicates into the parquet scan") {
     val p = planOf("filter_pred")
     assert(p.contains("PushedFilters: ["), s"no pushed filters in plan:\n$p")
@@ -278,6 +284,15 @@ class PlanShapeSpec extends SparkSpec {
     //     TakeOrdered top-100 — bounded by the limit, never corpus-sized)
     //   - llm_rank_ndcg rank + cumulative-DCG windows (input = the
     //     TakeOrdered top-10 shortlist — the llm_rank_fusion rationale)
+    //   - llm_dedup_clusters / llm_dedup_soft / llm_dedup_survivors: the
+    //     Dedup.assignTokenIds vocabulary window of llm_dedup_near's entry
+    //     (one row per DISTINCT token, same 10M gate), run inside the
+    //     pointer jump's staged pair table
+    //   - llm_elo_online: the ops.Rank __pid offsets window (numPartitions
+    //     rows) of its staged source index
+    //   - win_seasonal_decompose 7-day trend window (input = the day-grain
+    //     rollup, one row per calendar day — bounded by the observation
+    //     window, the agg_survival_km argument), run inside its stage
     val allow = Set(
       "agg_rfm", "llm_vocab_coverage", "llm_zipf_slope", "win_analytic",
       "llm_shard_plan",
@@ -285,27 +300,36 @@ class PlanShapeSpec extends SparkSpec {
       "llm_lsh_recall", "llm_decontaminate_fuzzy",
       "agg_survival_km", "graph_degree_dist", "agg_pareto", "agg_lorenz",
       "llm_sample_systematic", "llm_curriculum",
-      "llm_rank_fusion", "llm_rank_ndcg")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val skip = graft.tools.PlanScan.skipKeys
-      val offenders = scala.collection.mutable.ListBuffer[String]()
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn0) =>
-        if (!skip.contains(name)) {
-          val fn = graft.tools.PlanScan.auditOverrides.getOrElse(name, fn0)
-          val unpartitioned = fn(spark, sf0001).queryExecution.executedPlan.collect {
-            case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w
-          }
-          if (unpartitioned.nonEmpty && !allow.contains(name))
-            offenders += s"$name plans ${unpartitioned.size} partition-less window(s)"
-          if (unpartitioned.isEmpty && allow.contains(name))
-            offenders += s"$name is allowlisted but plans none — tighten the list"
-        }
-      }
-      assert(offenders.isEmpty,
-        s"partition-less WindowExec drift:\n  ${offenders.mkString("\n  ")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      "llm_rank_fusion", "llm_rank_ndcg",
+      "llm_dedup_clusters", "llm_dedup_soft", "llm_dedup_survivors",
+      "llm_elo_online", "win_seasonal_decompose")
+    // Each key is judged on every plan it executed (its stages and driver
+    // reads too, not only the frame it returns): PlanScan.executedPlans.
+    val offenders = scala.collection.mutable.ListBuffer[String]()
+    SparkEntry.queries.keys.toSeq.sorted.filterNot(graft.tools.PlanScan.skipKeys).foreach { name =>
+      val unpartitioned =
+        partitionlessWindows(graft.tools.PlanScan.executedPlans(spark, name, sf0001))
+      if (unpartitioned.nonEmpty && !allow.contains(name))
+        offenders += s"$name runs ${unpartitioned.size} partition-less window(s)"
+      if (unpartitioned.isEmpty && allow.contains(name))
+        offenders += s"$name is allowlisted but runs none — tighten the list"
+    }
+    assert(offenders.isEmpty,
+      s"partition-less WindowExec drift:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("the window guard sees a partition-less window run inside a stage") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val plans = graft.tools.PlanScan.executedPlans(spark) {
+      val numbered = graft.ops.Checkpoints.stage(spark.range(100).toDF("id")
+        .withColumn("g", row_number().over(Window.orderBy("id"))))
+      numbered.select((col("g") * 2).as("g2"))
+    }
+    assert(plans.map(_._1) == Seq("localCheckpoint", "foreach"), plans.map(_._1))
+    // the returned frame alone reads the staged blocks, no window
+    assert(partitionlessWindows(plans.takeRight(1)).isEmpty, plans.last._2)
+    assert(partitionlessWindows(plans).size == 1, plans.head._2)
   }
 
   test("agg_count_min reduces to one sketch per map task before the exchange") {

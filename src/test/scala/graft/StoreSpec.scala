@@ -150,10 +150,10 @@ class StoreSpec extends SparkSpec {
     assert(filesAfter("d=2024-01-01") != filesBefore("d=2024-01-01"))
   }
 
-  test("trend store upsert inside auditLazily stores the same rows as outside it") {
-    // inside an audit the staged merge stays lazy, so the overwrite's plan
+  test("trend store upsert overwrites the day partitions its merge reads") {
+    // Upsert.overwriteDays never stages the merge, so the overwrite's plan
     // reads the very day partitions it replaces; the store must still end
-    // up holding the same rows
+    // up holding the merged rows
     val base = Seq(
       (1L, "2024-01-01 10:00:00", 1.0), (2L, "2024-01-02 11:00:00", 2.0))
       .toDF("entity_id", "ts", "kpi_load")
@@ -162,17 +162,14 @@ class StoreSpec extends SparkSpec {
       (1L, "2024-01-01 10:00:00", 10.0), (3L, "2024-01-01 12:00:00", 3.0))
       .toDF("entity_id", "ts", "kpi_load")
       .withColumn("ts", col("ts").cast("timestamp"))
-    def upserted(audit: Boolean): Set[(Long, String, Double)] = {
-      val store = new TrendStore(spark, tmpDir("trend_upsert_audit"), Seq("kpi_load"))
-      store.write(base, "raw")
-      if (audit) graft.ops.Checkpoints.auditLazily(store.upsert(batch, "raw"))
-      else store.upsert(batch, "raw")
-      store.read("raw").select(col("entity_id"), col("ts").cast("string"), col("kpi_load"))
-        .as[(Long, String, Double)].collect().toSet
-    }
-    val plain = upserted(audit = false)
-    assert(plain.size == 3 && plain.exists(_._3 == 10.0))
-    assert(upserted(audit = true) == plain)
+    val store = new TrendStore(spark, tmpDir("trend_upsert_read"), Seq("kpi_load"))
+    store.write(base, "raw")
+    store.upsert(batch, "raw")
+    val stored = store.read("raw")
+      .select(col("entity_id"), col("ts").cast("string"), col("kpi_load"))
+      .as[(Long, String, Double)].collect().toSet
+    assert(stored == Set((1L, "2024-01-01 10:00:00", 10.0),
+      (2L, "2024-01-02 11:00:00", 2.0), (3L, "2024-01-01 12:00:00", 3.0)), stored)
   }
 
   test("lastWriterWins merges updates, inserts, and leaves the rest; one exchange") {
