@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Assemble the one-line bench JSON. The driver captures only the LAST
     * 2000 chars of output and parses the JSON line out of that tail; sbt
@@ -51,60 +50,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (executor threads, codegen compiler, parquet footer
-    // reader) so init cost isn't charged to whichever query runs first.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // Streaming keys carry several seconds of per-run checkpoint-I/O
-      // noise (a measured 76–93 s total spread in round 2 — the dominant
-      // grading variance); report their median of 3 runs. Batch keys run
-      // twice and report the WARM rep (min) — the r5/r7 adjudications both
-      // traced battery "regressions" to first-touch page-cache charges,
-      // and warm steady-state is the number a 1000-executor deployment
-      // actually pays (same method as SCALE_full).
-      val reps = if (name.startsWith("stream_")) 3 else 2
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        // foreach, NOT count (r7): count() lets Catalyst prune every
-        // operator the count doesn't need — win_interpolate's entire
-        // forward-neighbor window vanished from the count plan, hiding an
-        // O(partition²) frame for six rounds (27 s of real cost billed as
-        // 0.34 s). foreach forces every operator and materializes every
-        // output column — the number a user's query actually costs.
-        try fn(spark, sfDir).foreach(_ => ())
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            failed += name
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        // Measurement-isolation sweep (r12, guide §5), OUTSIDE the timed
-        // window: a finished rep's result/staged localCheckpoint blocks are
-        // dead (the frame was dropped above) but are only reclaimed when a
-        // GC runs the ContextCleaner hook — in a 407-query sequential JVM
-        // they pile into the unified memory region and the eventual full
-        // GC lands as a multi-second stall on whichever LATER key is
-        // running (measured: same-code key spikes of 8–26 s appearing on
-        // different keys each run, gone under the sweep). Dropping dead
-        // blocks between reps charges each key its own cost only — it
-        // caches nothing (every rep still computes from parquet).
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        t
-      }.sorted
-      name -> (if (name.startsWith("stream_")) times(times.size / 2) else times.head)
-    }
-    writeFull(results, failed.toSeq, sfDir,
+    val spark = Harness.session(Harness.cpus)
+    Harness.warm(spark, sfDir)
+    val (results, failed) = Harness.timeAll(spark, SparkEntry.queries, sfDir, "bench")
+    writeFull(results, failed, sfDir,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_full.json"))
     println(renderLine(results, sfDir))
     spark.stop()

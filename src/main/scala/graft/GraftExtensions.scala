@@ -7,7 +7,7 @@ import graft.functions.Kernels
 /** Session-extension entry point for the library's custom Catalyst
   * functions, activated with
   * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`).
+  * `withExtensions(new GraftExtensions)` on a session builder).
   *
   * It injects every entry of the [[graft.functions.Kernels]] catalogue, so
   * each session state built over the context resolves them, including

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainUtils
 
 /** Write the formatted physical plans of named query keys to files —
@@ -17,12 +16,7 @@ object PlanDump {
     val tag = args(1)
     val keys = args(2).split(",").toSeq
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(4)
     new java.io.File(outDir).mkdirs()
     keys.foreach { k =>
       val body =

@@ -3,8 +3,6 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
-
 /** One-more-decade scaling probe: derives a 10× copy of sf0.1 (≈sf1) in
   * /tmp and times scale-sensitive keys on it, extending the NOTES
   * cross-SF table by another order of magnitude on real executions.
@@ -25,6 +23,10 @@ import graft.SparkEntry
   *    (shared tokens replace identically), cross-copy same-doc Jaccard
   *    drops to ≈0.14 and cross-copy minhash bands diverge — the
   *    density-preserving 10× scale-up.
+  *
+  * Keys are timed through [[graft.Harness.timeKey]] (its scaladoc gives
+  * the method); a key that throws prints `[scale] <key> failed: <msg>` to
+  * stderr and the exit status is 1.
   *
   * Run: `sbt "runMain graft.tools.ScaleProbe [keys] [reps] [stress|clean]"`.
   */
@@ -114,30 +116,12 @@ object ScaleProbe {
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val clean = args.lift(2).contains("clean")
     val OutDir = if (clean) "/tmp/graft_sfx10_clean" else "/tmp/graft_sfx10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions") // bench parity
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     build(spark, "/root/testdata/sf0.1", OutDir, clean)
     buildEmb(spark, "/root/testdata/sf0.1", OutDir)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    keys.foreach { k =>
-      val fn = SparkEntry.queries.getOrElse(k, sys.error(s"unknown key $k"))
-      (1 to reps).foreach { r =>
-        // foreach, not count — count() lets Catalyst prune operators the
-        // count doesn't need (the r7 win_interpolate lesson); same method
-        // as Bench/ScaleFull/TimeOne
-        val rows = spark.sparkContext.longAccumulator
-        val t0 = System.nanoTime()
-        fn(spark, OutDir).foreach(_ => rows.add(1L))
-        println(f"[scale] $k rep$r: ${(System.nanoTime() - t0) / 1e9}%.2f s (${rows.value} rows)")
-      }
-    }
+    graft.Harness.warm(spark, OutDir)
+    val failed = graft.Harness.timeKeys(spark, keys, OutDir, reps, "scale")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -110,4 +110,9 @@ class HarnessSpec extends SparkSpec {
     val offenders = mainSourcesCalling("""\.localCheckpoint\b""".r)
     assert(offenders == Set("Checkpoints.scala"), offenders)
   }
+
+  test("only the harness builds a SparkSession") {
+    val offenders = mainSourcesCalling("""SparkSession\.builder""".r)
+    assert(offenders == Set("Harness.scala"), offenders)
+  }
 }

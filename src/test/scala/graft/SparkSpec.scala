@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session fixture: one local session per JVM (suites run
-  * sequentially in the forked test JVM), UTC, small shuffle fan-out. */
+  * sequentially in the forked test JVM), built like the tools' sessions
+  * by [[Harness.session]] at `local[4]`. */
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf0001 = "/root/testdata/sf0.001"
@@ -21,17 +22,7 @@ abstract class SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Harness.session(4)
 
   /** A fresh child of the shared session with every
     * [[graft.functions.Kernels]] entry dropped from its registry: what a
